@@ -8,10 +8,21 @@ REGISTRY only — the harness then runs a weaker rows-only check.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+import functools
+from collections.abc import Callable, Iterable, Iterator, Sequence
 from contextlib import contextmanager
+from datetime import timezone
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    TimestampType,
+    _parse_datatype_string,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -98,16 +109,119 @@ def materialize(df: DataFrame) -> DataFrame:
     before the operator returns.
 
     Only for domain-sized outputs (census rows, top-k rankings,
-    cluster-size rollups) — the same bounded-summary contract the
-    repo's existing ``createDataFrame(collect())`` sites declare.
-    Never call this on fact-scale frames — enforced by
-    ``MATERIALIZE_MAX_ROWS`` (VERDICT r8 item 3): a breach raises
-    loudly instead of silently shipping a driver-side collect."""
-    rows = collect_bounded(df)
-    local = df.sparkSession.createDataFrame(rows, df.schema)
+    cluster-size rollups). Never call this on fact-scale frames —
+    enforced by ``MATERIALIZE_MAX_ROWS`` (VERDICT r8 item 3): a breach
+    raises loudly instead of silently shipping a driver-side collect.
+
+    The rows never leave the JVM: they are collected as JVM ``Row``s
+    and handed straight back to the JVM session, which plans them as a
+    ``LocalRelation``. Rebuilding from Python ``Row``s instead plans a
+    ``LogicalRDD`` over a ``PythonRDD``, so every later action on the
+    result would re-run a Python-worker stage."""
+    jrows = df._jdf.collectAsList()
+    _check_bounded(jrows.size(), MATERIALIZE_MAX_ROWS)
+    spark = df.sparkSession
+    local = DataFrame(
+        spark._jsparkSession.createDataFrame(jrows, df._jdf.schema()), spark
+    )
     if _CAPTURE_ACTIVE:
         LAST_MATERIALIZED.append((df, local))
     return local
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Any], ddl: str) -> DataFrame:
+    """Build a small DataFrame from Python rows: parameter grids,
+    constant tables, sink snapshots.
+
+    The one sanctioned way to turn a Python list into a frame.
+    ``spark.createDataFrame(<list>, ddl)`` plans a ``LogicalRDD`` over a
+    ``PythonRDD``, so every action on it (and on anything joined to it)
+    re-runs a stage in Python workers. This builds a ``pyarrow.Table``
+    against the schema instead, which Spark plans as a
+    ``LocalRelation``. Values are read as the row path reads them:
+    rows and nested structs may be tuples (by position), dicts (by
+    field name) or ``Row``s, and a naive ``datetime`` in a ``timestamp``
+    column is wall time in the host's local zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = _struct_type(ddl)
+    names = struct.names
+    convs = [_arrow_input(f.dataType) for f in struct.fields]
+    cols: list[list[Any]] = [[] for _ in names]
+    for row in rows:
+        vals = _struct_values(row, names)
+        if len(vals) != len(names):
+            raise ValueError(
+                f"local_frame: row {row!r} has {len(vals)} fields, "
+                f"schema has {len(names)}"
+            )
+        for col, conv, v in zip(cols, convs, vals):
+            col.append(v if conv is None or v is None else conv(v))
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, arrow_schema.types)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
+
+
+@functools.lru_cache(maxsize=None)
+def _struct_type(ddl: str) -> StructType:
+    return _parse_datatype_string(ddl)
+
+
+def _struct_values(obj: Any, names: list[str]) -> Sequence[Any]:
+    """A struct value's fields in schema order, as the row path reads
+    them (StructType.toInternal): dicts by name, tuples positionally,
+    other objects by attribute."""
+    if isinstance(obj, dict):
+        return [obj.get(n) for n in names]
+    if isinstance(obj, (tuple, list)):
+        return obj
+    return [obj.__dict__.get(n) for n in names]
+
+
+def _arrow_input(dt: DataType) -> Callable[[Any], Any] | None:
+    """Per-value function turning a non-null row-path value of type
+    ``dt`` into the form pyarrow reads the same way, or None when
+    pyarrow already does. pyarrow reads a naive datetime as UTC, the
+    row path as local time; pyarrow reads one struct spelling per
+    column, the row path any mix."""
+    if isinstance(dt, TimestampType):
+        return lambda v: v.astimezone(timezone.utc) if v.tzinfo is None else v
+    if isinstance(dt, ArrayType):
+        elem = _arrow_input(dt.elementType)
+        if elem is None:
+            return None
+        return lambda v: [x if x is None else elem(x) for x in v]
+    if isinstance(dt, MapType):
+        key, val = _arrow_input(dt.keyType), _arrow_input(dt.valueType)
+        if key is None and val is None:
+            return None
+        key, val = key or _same, val or _same
+        return lambda v: {key(k): x if x is None else val(x) for k, x in v.items()}
+    if isinstance(dt, StructType):
+        names = dt.names
+        convs = [_arrow_input(f.dataType) or _same for f in dt.fields]
+        return lambda v: {
+            n: x if x is None else c(x)
+            for n, c, x in zip(names, convs, _struct_values(v, names))
+        }
+    return None
+
+
+def _same(v: Any) -> Any:
+    return v
+
+
+def _check_bounded(n: int, n_max: int) -> None:
+    if n > n_max:
+        raise RuntimeError(
+            f"collect_bounded: {n} rows exceeds the bounded-summary "
+            f"contract ({n_max}); this frame is fact-scale — keep it "
+            f"distributed (see operators/__init__.py MATERIALIZE_MAX_ROWS)"
+        )
 
 
 def collect_bounded(df: DataFrame, n_max: int = MATERIALIZE_MAX_ROWS) -> list:
@@ -119,12 +233,7 @@ def collect_bounded(df: DataFrame, n_max: int = MATERIALIZE_MAX_ROWS) -> list:
     domain-sized. Fails loudly past ``n_max`` so a future operator
     can't silently collect a fact-scale frame to the driver."""
     rows = df.collect()
-    if len(rows) > n_max:
-        raise RuntimeError(
-            f"collect_bounded: {len(rows)} rows exceeds the bounded-summary "
-            f"contract ({n_max}); this frame is fact-scale — keep it "
-            f"distributed (see operators/__init__.py MATERIALIZE_MAX_ROWS)"
-        )
+    _check_bounded(len(rows), n_max)
     return rows
 
 

@@ -47,6 +47,7 @@ from bigdataentrytask_spark.functions.text import (
 )
 from bigdataentrytask_spark.operators import (
     collect_bounded,
+    local_frame,
     materialize,
     operator,
 )
@@ -1118,8 +1119,8 @@ def _register_quality_pruning_curve() -> dict[str, tuple]:
             F.count(F.lit(1)).over(Window.partitionBy()).alias("n_total"),
             F.sum("n_tokens").over(Window.partitionBy()).alias("tok_total"),
         )
-        fr = spark.createDataFrame(
-            [(f,) for f in _PRUNE_FRACS_PPM], "drop_frac_ppm long"
+        fr = local_frame(
+            spark, [(f,) for f in _PRUNE_FRACS_PPM], "drop_frac_ppm long"
         )
         keep_n = F.floor(
             F.col("n_total") * (1_000_000 - F.col("drop_frac_ppm")) / 1e6
@@ -1317,8 +1318,8 @@ def _register_quality_threshold_pruning() -> dict[str, tuple]:
                     bool(gap_ok),
                 )
             )
-        return spark.createDataFrame(
-            out_rows,
+        return local_frame(
+            spark, out_rows,
             "drop_frac_ppm long, n_total long, exact_thresh_e6 long, "
             "n_kept_exact long, sketch_rank_ok boolean, "
             "kept_gap_ok boolean",
@@ -1422,8 +1423,8 @@ def shard_mix_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
         16,
         10,
     ).cast("bigint")
-    sc = spark.createDataFrame(
-        [(s,) for s in _SHARD_COUNTS], "shard_count long"
+    sc = local_frame(
+        spark, [(s,) for s in _SHARD_COUNTS], "shard_count long"
     )
     tagged = d.select("source", h.alias("h")).crossJoin(F.broadcast(sc))
     cell = tagged.groupBy(
@@ -1581,8 +1582,8 @@ def shard_stratified_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    sc = spark.createDataFrame(
-        [(s,) for s in _SHARD_COUNTS], "shard_count long"
+    sc = local_frame(
+        spark, [(s,) for s in _SHARD_COUNTS], "shard_count long"
     )
     h = F.conv(
         F.substring(

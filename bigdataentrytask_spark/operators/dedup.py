@@ -41,7 +41,7 @@ from bigdataentrytask_spark.functions.text import (
     token_hash,
     tokens,
 )
-from bigdataentrytask_spark.operators import operator
+from bigdataentrytask_spark.operators import local_frame, operator
 from bigdataentrytask_spark.session import ensure_session_confs
 
 JACCARD_THRESHOLD = 0.8
@@ -184,7 +184,7 @@ def _sql_match_frac() -> str:
 )
 def minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    est_bytes = _scan_size_bytes(docs)
+    est_bytes = _scan_size_bytes(docs, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("tok")
     )
@@ -584,7 +584,7 @@ def _sql_simhash_expr() -> str:
 )
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    est_bytes = _scan_size_bytes(docs)
+    est_bytes = _scan_size_bytes(docs, "documents")
     # weight = occurrence count, summed implicitly: one ±1 contribution
     # per token OCCURRENCE is identical to cnt * ±1 per distinct token,
     # and drops the (doc_id, tok) pre-aggregation shuffle entirely —
@@ -697,13 +697,19 @@ _LANE_INPUT_BYTES = 64 << 20
 _LANE_MAX = 1 << 20
 
 
-def _scan_size_bytes(df: DataFrame) -> int:
+def _scan_size_bytes(df: DataFrame, name: str) -> int:
     """Optimizer size estimate of a frame's source, in bytes (for file
-    scans: the sum of file sizes — exact, no job). 0 when unavailable."""
+    scans: the sum of file sizes — exact, no job). Raises when the
+    estimate is unavailable: returning 0 would silently drop the
+    caller to the parallelism-only lane count, the unbounded per-lane
+    posture the data term exists to prevent."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 0
+    except Exception as exc:
+        raise RuntimeError(
+            f"_scan_size_bytes: no optimizer size estimate for {name!r}; "
+            f"kernel lanes cannot be sized by data volume"
+        ) from exc
 
 
 def _kernel_lanes(
@@ -2748,8 +2754,8 @@ def contamination_source_crosstab(
         .groupBy("source")
         .agg(F.count_distinct("doc_id").cast("bigint").alias("n_docs"))
     )
-    es = spark.createDataFrame(
-        [("eval_a",), ("eval_b",)], "eval_set string"
+    es = local_frame(
+        spark, [("eval_a",), ("eval_b",)], "eval_set string"
     )
     return (
         base.crossJoin(F.broadcast(es))

@@ -16,6 +16,7 @@ from bigdataentrytask_spark.functions.vector import (  # noqa: F401
     stack_f64,
 )
 from bigdataentrytask_spark.operators import (  # noqa: F401
+    local_frame,
     materialize,
     operator,
     with_persisted,
@@ -225,8 +226,8 @@ def ivf_cell_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = assigned.groupBy("k").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vecs")
     )
-    cells = spark.createDataFrame(
-        [(c,) for c in range(KMEANS_K)], "cell long"
+    cells = local_frame(
+        spark, [(c,) for c in range(KMEANS_K)], "cell long"
     )
     tot = counts.agg(F.sum("n_vecs").alias("n_total"))
     full_c = (
@@ -1703,8 +1704,8 @@ def ivf_adc_lloyd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "neighbor_id", F.lit(1).alias("is_true"))
         )
-        pr = spark.createDataFrame(
-            [(p,) for p in _IVF_ADC_PROBES], "nprobe long"
+        pr = local_frame(
+            spark, [(p,) for p in _IVF_ADC_PROBES], "nprobe long"
         )
         vol = (
             need.crossJoin(F.broadcast(pr))

@@ -22,6 +22,7 @@ from bigdataentrytask_spark.functions.vector import (  # noqa: F401
     stack_f64,
 )
 from bigdataentrytask_spark.operators import (  # noqa: F401
+    local_frame,
     materialize,
     operator,
     with_persisted,
@@ -330,8 +331,8 @@ def ivf_cell_lloyd_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ),
                     ["variant", "query_id", "k"],
                 )
-                pr = spark.createDataFrame(
-                    [(p,) for p in _CELL_PROBES], "nprobe long"
+                pr = local_frame(
+                    spark, [(p,) for p in _CELL_PROBES], "nprobe long"
                 )
                 cov = (
                     tcell.crossJoin(F.broadcast(pr))
@@ -598,10 +599,11 @@ def quantization_budget_pareto(
             .alias("r_bin"),
         )
         with with_persisted(ranked) as ranked_p:
-            bud = spark.createDataFrame(
-                [(b,) for b in _QBP_BUDGETS], "budget long"
+            bud = local_frame(
+                spark, [(b,) for b in _QBP_BUDGETS], "budget long"
             )
-            cfg = spark.createDataFrame(
+            cfg = local_frame(
+                spark,
                 [
                     ("a_exact_f32", 256, "r_exact"),
                     ("b_matryoshka_d16", _QBP_PREFIX * 4, "r_m16"),

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdataentrytask_spark.operators import (
+    local_frame,
     materialize,
     with_persisted,
 )
@@ -257,8 +258,8 @@ def tail_probe_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("need_probe").alias("first_hit"),
                 F.max("need_probe").alias("full_cover"),
             )
-            pr = spark.createDataFrame(
-                [(p,) for p in range(1, KMEANS_K + 1)], "nprobe long"
+            pr = local_frame(
+                spark, [(p,) for p in range(1, KMEANS_K + 1)], "nprobe long"
             )
             fh = (
                 perq.crossJoin(F.broadcast(pr))
@@ -714,8 +715,8 @@ def cell_overlap_assignment(
                     .groupBy("variant", "query_id", "neighbor_id")
                     .agg(F.min("cell_rank").alias("need"))
                 )
-                pr = spark.createDataFrame(
-                    [(p,) for p in _COA_PROBES], "nprobe long"
+                pr = local_frame(
+                    spark, [(p,) for p in _COA_PROBES], "nprobe long"
                 )
                 perq = (
                     cover.crossJoin(F.broadcast(pr))
@@ -1236,8 +1237,8 @@ def adc_rerank_depth_recall(
                     "query_id", "neighbor_id", F.lit(1).alias("is_true")
                 )
             )
-            bb = spark.createDataFrame(
-                [(b,) for b in _ARD_BUDGETS], "budget long"
+            bb = local_frame(
+                spark, [(b,) for b in _ARD_BUDGETS], "budget long"
             )
             sel = (
                 adcr.crossJoin(F.broadcast(bb))

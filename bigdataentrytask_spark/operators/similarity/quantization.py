@@ -16,6 +16,7 @@ from bigdataentrytask_spark.functions.vector import (  # noqa: F401
     stack_f64,
 )
 from bigdataentrytask_spark.operators import (  # noqa: F401
+    local_frame,
     materialize,
     operator,
     with_persisted,
@@ -1477,8 +1478,8 @@ def quantization_pareto_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(8).cast("bigint").alias("bytes_per_vec"),
         F.col("recall_sym").alias("recall_at_5"),
     )
-    anchor = spark.createDataFrame(
-        [("a_full_f32", 256, 1.0)],
+    anchor = local_frame(
+        spark, [("a_full_f32", 256, 1.0)],
         "config string, bytes_per_vec long, recall_at_5 double",
     )
     return (
@@ -1689,8 +1690,8 @@ def multiprobe_schedule_advisor(
         truth = knn_bruteforce(spark, sf_dir).select(
             "query_id", "neighbor_id", F.lit(1).alias("is_true")
         )
-        rr = spark.createDataFrame(
-            [(r,) for r in _PROBE_RADII], "probe_radius long"
+        rr = local_frame(
+            spark, [(r,) for r in _PROBE_RADII], "probe_radius long"
         )
         vol = (
             dmin.crossJoin(F.broadcast(rr))
@@ -2257,8 +2258,8 @@ def ivf_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "neighbor_id", F.lit(1).alias("is_true"))
         )
-        pr = spark.createDataFrame(
-            [(p,) for p in _IVF_ADC_PROBES], "nprobe long"
+        pr = local_frame(
+            spark, [(p,) for p in _IVF_ADC_PROBES], "nprobe long"
         )
         vol = (
             need.crossJoin(F.broadcast(pr))

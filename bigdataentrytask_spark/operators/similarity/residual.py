@@ -23,6 +23,7 @@ from bigdataentrytask_spark.functions.vector import (  # noqa: F401
     stack_f64,
 )
 from bigdataentrytask_spark.operators import (  # noqa: F401
+    local_frame,
     materialize,
     operator,
     with_persisted,
@@ -456,8 +457,8 @@ def ivf_adc_refined_joint_recall(
                 .alias("dd")
             )
         )
-        pr = spark.createDataFrame(
-            [(p,) for p in _IVF_ADC_PROBES], "nprobe long"
+        pr = local_frame(
+            spark, [(p,) for p in _IVF_ADC_PROBES], "nprobe long"
         )
         ranked = (
             adc.crossJoin(F.broadcast(pr))
@@ -1203,8 +1204,8 @@ def residual_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("dd")
                 )
             )
-            pr = spark.createDataFrame(
-                [(p,) for p in _IVF_ADC_PROBES], "nprobe long"
+            pr = local_frame(
+                spark, [(p,) for p in _IVF_ADC_PROBES], "nprobe long"
             )
             ranked = (
                 adc.crossJoin(F.broadcast(pr))
@@ -2043,8 +2044,8 @@ def adc_recall_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             adc = adc_raw.unionByName(adc_res)
-            pr = spark.createDataFrame(
-                [(p,) for p in _IVF_ADC_PROBES], "nprobe long"
+            pr = local_frame(
+                spark, [(p,) for p in _IVF_ADC_PROBES], "nprobe long"
             )
             ranked = (
                 adc.crossJoin(F.broadcast(pr))
@@ -2094,8 +2095,8 @@ def adc_recall_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
             qdom = e.filter(F.col("vec_id") < N_QUERIES).select(
                 F.col("vec_id").alias("query_id")
             )
-            vp = spark.createDataFrame(
-                [("b_joint",), ("c_residual",)], "variant string"
+            vp = local_frame(
+                spark, [("b_joint",), ("c_residual",)], "variant string"
             )
             hcounts = (
                 ranked.join(truth, ["query_id", "neighbor_id"], "left")

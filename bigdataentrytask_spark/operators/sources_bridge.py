@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataentrytask_spark.catalog import load_table
-from bigdataentrytask_spark.operators import materialize, operator
+from bigdataentrytask_spark.operators import local_frame, materialize, operator
 from bigdataentrytask_spark.session import ensure_session_confs
 from bigdataentrytask_spark.sources.jdbc import read_jdbc_table, write_jdbc_table
 from bigdataentrytask_spark.sources.writers import (
@@ -469,7 +469,8 @@ def observed_landing_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_null_user": lambda v: v == 0,
             },
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (
                     got["n_rows"],
@@ -525,8 +526,8 @@ def dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "yr"
         ).mode("overwrite").parquet(f"{root}/orders")
         fact = spark.read.parquet(f"{root}/orders")
-        dim = spark.createDataFrame(
-            [(y, "keep") for y in _DPP_YEARS], "dim_yr int, tag string"
+        dim = local_frame(
+            spark, [(y, "keep") for y in _DPP_YEARS], "dim_yr int, tag string"
         ).filter(F.col("tag") == "keep")
         joined = fact.join(
             F.broadcast(dim), fact.yr == dim.dim_yr

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdataentrytask_spark.catalog import load_table
-from bigdataentrytask_spark.operators import collect_bounded, operator
+from bigdataentrytask_spark.operators import collect_bounded, local_frame, operator
 from bigdataentrytask_spark.session import ensure_session_confs
 
 
@@ -471,8 +471,8 @@ def cms_user_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         est = cms.estimateCount(jvm.java.lang.Long(int(r.user_id)))
         ok = r.exact_cnt <= est <= r.exact_cnt + slack
         rows.append((int(r.user_id), int(r.exact_cnt), bool(ok)))
-    return spark.createDataFrame(
-        rows, "user_id long, exact_cnt long, cms_ok boolean"
+    return local_frame(
+        spark, rows, "user_id long, exact_cnt long, cms_ok boolean"
     ).orderBy("user_id")
 
 
@@ -541,7 +541,8 @@ def bloom_membership_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     without = [k for k in all_keys if k not in with_orders]
     fp = sum(1 for k in without if bf.mightContain(int(k)))
     fp_rate = fp / max(1, len(without))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             len(all_keys),
             len(with_orders),
@@ -638,8 +639,8 @@ def column_quantile_sketch_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(Window.partitionBy("col_name")).alias("n"),
     )
-    qs = spark.createDataFrame(
-        [(q,) for q in _QSKETCH_QS], "q_pct long"
+    qs = local_frame(
+        spark, [(q,) for q in _QSKETCH_QS], "q_pct long"
     )
     exact = (
         ranked.join(
@@ -660,8 +661,8 @@ def column_quantile_sketch_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, q in enumerate(_QSKETCH_QS):
             v = float(ap[i])
             checks.append((col_name, q, v))
-    cdf = spark.createDataFrame(
-        checks, "col_name string, q_pct long, v double"
+    cdf = local_frame(
+        spark, checks, "col_name string, q_pct long, v double"
     )
     counted = (
         src.join(F.broadcast(cdf), "col_name")

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from bigdataentrytask_spark.operators import (
     collect_bounded,
+    local_frame,
     materialize,
     operator,
     with_persisted,
@@ -538,8 +539,8 @@ def stream_concurrent_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows.append((name, len(snap), sum(cents)))
     return (
-        spark.createDataFrame(
-            rows, "sink string, n_rows long, total_cents long"
+        local_frame(
+            spark, rows, "sink string, n_rows long, total_cents long"
         )
         .orderBy("sink")
     )
@@ -741,8 +742,8 @@ def stream_latest_image_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for uid, s in sorted(state.items())
         ]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "user_id long, last_type string, last_ts string, last_cents long",
         )
     finally:
@@ -811,8 +812,8 @@ def stream_hourly_channel_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (r["h"], r["event_type"], r["cnt"]) for r in sink.snapshot()
     ]
-    landed = spark.createDataFrame(
-        rows, "h timestamp_ntz, event_type string, cnt long"
+    landed = local_frame(
+        spark, rows, "h timestamp_ntz, event_type string, cnt long"
     )
     return (
         landed.groupBy("h")
@@ -1118,8 +1119,8 @@ def stream_state_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         F.unix_timestamp("ts").alias("es"), "user_id"
     )
-    hz = spark.createDataFrame(
-        [(h,) for h in _STATE_HORIZONS_S], "horizon_s long"
+    hz = local_frame(
+        spark, [(h,) for h in _STATE_HORIZONS_S], "horizon_s long"
     )
     spans = (
         ev.crossJoin(F.broadcast(hz))
@@ -1148,8 +1149,8 @@ def stream_state_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("b")
     )
     # independent horizon frame for the grid side (see block comment)
-    hz_cells = spark.createDataFrame(
-        [(h,) for h in _STATE_HORIZONS_S], "horizon_s long"
+    hz_cells = local_frame(
+        spark, [(h,) for h in _STATE_HORIZONS_S], "horizon_s long"
     )
     cells = grid.crossJoin(F.broadcast(hz_cells))
     st = (
@@ -1251,8 +1252,8 @@ def allowed_lateness_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros(F.max("ts").over(w)) - F.unix_micros(F.col("ts"))
         ).alias("lag_us"),
     )
-    cands = spark.createDataFrame(
-        _LATENESS_CANDIDATES_US, "delay_label string, delay_us long"
+    cands = local_frame(
+        spark, _LATENESS_CANDIDATES_US, "delay_label string, delay_us long"
     )
     j = lagged.crossJoin(F.broadcast(cands))
     late_kept = (F.col("lag_us") > 0) & (F.col("lag_us") <= F.col("delay_us"))
@@ -1373,11 +1374,11 @@ def trigger_lateness_joint_cost(
         F.date_trunc("minute", "ts").alias("win"),
         F.max("ts").over(w).alias("front"),
     )
-    tr = spark.createDataFrame(
-        [(t,) for t in _JOINT_TRIGGERS_S], "trigger_s long"
+    tr = local_frame(
+        spark, [(t,) for t in _JOINT_TRIGGERS_S], "trigger_s long"
     )
-    dl = spark.createDataFrame(
-        _JOINT_DELAYS_US, "delay_label string, delay_us long"
+    dl = local_frame(
+        spark, _JOINT_DELAYS_US, "delay_label string, delay_us long"
     )
     kept = (
         lagged.crossJoin(F.broadcast(tr))
@@ -1508,8 +1509,8 @@ def session_gap_state_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_micros("ts").alias("t")
     )
-    gp = spark.createDataFrame(
-        [(g,) for g in _SESSION_GAPS_S], "gap_s long"
+    gp = local_frame(
+        spark, [(g,) for g in _SESSION_GAPS_S], "gap_s long"
     )
     j = ev.crossJoin(F.broadcast(gp))
     wl = Window.partitionBy("gap_s", "user_id").orderBy("t")
@@ -1682,8 +1683,8 @@ def session_state_batch_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_micros("ts").alias("t")
     )
-    gp = spark.createDataFrame(
-        [(g,) for g in _SESSION_GAPS_S], "gap_s long"
+    gp = local_frame(
+        spark, [(g,) for g in _SESSION_GAPS_S], "gap_s long"
     )
     wl = Window.partitionBy("gap_s", "user_id").orderBy("t")
     isl = (
@@ -1706,8 +1707,8 @@ def session_state_batch_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     sess = isl.groupBy("gap_s", "user_id", "sid").agg(
         F.min("t").alias("t0"), F.max("t").alias("t1")
     )
-    tr = spark.createDataFrame(
-        [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
+    tr = local_frame(
+        spark, [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
     )
     p_us = F.col("trigger_s") * 1_000_000
     spans = sess.crossJoin(F.broadcast(tr)).select(
@@ -1739,8 +1740,8 @@ def session_state_batch_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("t0").alias("mn_t0"), F.max("t1").alias("mx_t1")
     )
     # independent trigger frame for the grid side (BNLJ trap note)
-    tr_grid = spark.createDataFrame(
-        [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
+    tr_grid = local_frame(
+        spark, [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
     )
     pg_us = F.col("trigger_s") * 1_000_000
     # same descending-sequence guard as the hits side (ADVICE r11):
@@ -1874,8 +1875,8 @@ def watermark_state_bytes_joint(
         F.unix_micros("ts").alias("t_us"),
         F.unix_micros(F.max("ts").over(w)).alias("front_us"),
     )
-    dl = spark.createDataFrame(
-        _LATENESS_CANDIDATES_US, "delay_label string, delay_us long"
+    dl = local_frame(
+        spark, _LATENESS_CANDIDATES_US, "delay_label string, delay_us long"
     )
     wins = (
         lagged.crossJoin(F.broadcast(dl))
@@ -2075,8 +2076,8 @@ def dedup_ttl_state_projection(
         "user_id", "event_type", "event_id",
         F.unix_micros("ts").alias("t"),
     )
-    ttl = spark.createDataFrame(
-        [(s,) for s in _DEDUP_TTL_CANDS_S], "ttl_s long"
+    ttl = local_frame(
+        spark, [(s,) for s in _DEDUP_TTL_CANDS_S], "ttl_s long"
     )
     wl = Window.partitionBy("ttl_s", "user_id", "event_type").orderBy(
         "t", "event_id"
@@ -2301,14 +2302,14 @@ def state_sizing_threeway(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_micros("ts").alias("t")
     )
-    gp = spark.createDataFrame(
-        [(g,) for g in _SESSION_GAPS_S], "gap_s long"
+    gp = local_frame(
+        spark, [(g,) for g in _SESSION_GAPS_S], "gap_s long"
     )
-    tr = spark.createDataFrame(
-        [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
+    tr = local_frame(
+        spark, [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
     )
-    dl = spark.createDataFrame(
-        _LATENESS_CANDIDATES_US, "delay_label string, delay_us long"
+    dl = local_frame(
+        spark, _LATENESS_CANDIDATES_US, "delay_label string, delay_us long"
     )
     wl = Window.partitionBy("gap_s", "user_id").orderBy("t", "event_id")
     wi = Window.partitionBy("gap_s", "user_id").orderBy("t")
@@ -2395,8 +2396,8 @@ def state_sizing_threeway(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("open_t").alias("mn_w"),
         F.max(F.col("close_t") - 1).alias("mx_w"),
     )
-    tr_grid = spark.createDataFrame(
-        [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
+    tr_grid = local_frame(
+        spark, [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
     )
     pg_us = F.col("trigger_s") * 1_000_000
     g_lo = F.floor(
@@ -2827,11 +2828,11 @@ def dedup_ttl_policy_joint(
         "user_id", "event_type", "event_id",
         F.unix_micros("ts").alias("t"),
     )
-    ttl = spark.createDataFrame(
-        [(s,) for s in _DEDUP_TTL_CANDS_S], "ttl_s long"
+    ttl = local_frame(
+        spark, [(s,) for s in _DEDUP_TTL_CANDS_S], "ttl_s long"
     )
-    tr = spark.createDataFrame(
-        [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
+    tr = local_frame(
+        spark, [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
     )
     # sliding intervals: gap islands, [t0, t1 + ttl)
     wl = Window.partitionBy("ttl_s", "user_id", "event_type").orderBy(
@@ -3116,11 +3117,11 @@ def trigger_sampling_deficit(
         "user_id", "event_type", "event_id",
         F.unix_micros("ts").alias("t"),
     )
-    ttl = spark.createDataFrame(
-        [(s,) for s in _DEDUP_TTL_CANDS_S], "ttl_s long"
+    ttl = local_frame(
+        spark, [(s,) for s in _DEDUP_TTL_CANDS_S], "ttl_s long"
     )
-    tr = spark.createDataFrame(
-        [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
+    tr = local_frame(
+        spark, [(t,) for t in _BATCH_PEAK_TRIGGERS_S], "trigger_s long"
     )
     wl = Window.partitionBy("ttl_s", "user_id", "event_type").orderBy(
         "t", "event_id"
@@ -3416,11 +3417,11 @@ def deficit_cost_frontier(
         "user_id", "event_type", "event_id",
         F.unix_micros("ts").alias("t"),
     )
-    ttl = spark.createDataFrame(
-        [(s,) for s in _DEDUP_TTL_CANDS_S], "ttl_s long"
+    ttl = local_frame(
+        spark, [(s,) for s in _DEDUP_TTL_CANDS_S], "ttl_s long"
     )
-    tr = spark.createDataFrame(
-        [(t,) for t in _DCF_TRIGGERS_S], "trigger_s long"
+    tr = local_frame(
+        spark, [(t,) for t in _DCF_TRIGGERS_S], "trigger_s long"
     )
     wl = Window.partitionBy("ttl_s", "user_id", "event_type").orderBy(
         "t", "event_id"

@@ -20,7 +20,7 @@ from bigdataentrytask_spark.functions.text import (
     token_hash,
     tokens,
 )
-from bigdataentrytask_spark.operators import operator
+from bigdataentrytask_spark.operators import local_frame, operator
 from bigdataentrytask_spark.session import ensure_session_confs
 
 from bigdataentrytask_spark.operators.text_analysis.core import (  # noqa: E402
@@ -409,8 +409,6 @@ def _register_curation_compositions() -> None:
         stage/in/out table. Each stage is the REGISTERED, verified
         operator; this entry pins their composition so a regression
         in any stage moves the funnel."""
-        from pyspark.sql import Row
-
         exact_n = REGISTRY["dedup_exact"](spark, sf_dir).count()
         docs_n = _docs(spark, sf_dir).count()
         mh_n = REGISTRY["minhash_dedup"](spark, sf_dir).count()
@@ -418,15 +416,13 @@ def _register_curation_compositions() -> None:
         emb_n = sem.count()
         sem_keep = sem.filter(F.col("keep")).count()
         rows = [
-            Row(stage="stage1_exact", n_in=docs_n, n_out=exact_n),
-            Row(stage="stage2_minhash_pairs", n_in=exact_n, n_out=mh_n),
-            Row(
-                stage="stage3_semantic_keepers",
-                n_in=emb_n,
-                n_out=sem_keep,
-            ),
+            ("stage1_exact", docs_n, exact_n),
+            ("stage2_minhash_pairs", exact_n, mh_n),
+            ("stage3_semantic_keepers", emb_n, sem_keep),
         ]
-        return spark.createDataFrame(rows).orderBy("stage")
+        return local_frame(
+            spark, rows, "stage string, n_in long, n_out long"
+        ).orderBy("stage")
 
 
 _register_curation_compositions()
@@ -1046,7 +1042,7 @@ def _register_bm25_topk() -> None:
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("dl").cast("bigint").alias("total_toks"),
         )
-        q = spark.createDataFrame(_BM25_QUERIES, ["query_id", "term"])
+        q = local_frame(spark, _BM25_QUERIES, "query_id string, term string")
         idf = F.log(
             1
             + (F.col("n").cast("double") - F.col("df") + 0.5)

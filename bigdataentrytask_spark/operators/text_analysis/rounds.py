@@ -21,7 +21,7 @@ from bigdataentrytask_spark.functions.text import (
     token_hash,
     tokens,
 )
-from bigdataentrytask_spark.operators import operator
+from bigdataentrytask_spark.operators import local_frame, operator
 from bigdataentrytask_spark.session import ensure_session_confs
 
 from bigdataentrytask_spark.operators.text_analysis.core import (  # noqa: E402
@@ -552,8 +552,8 @@ def pack_length_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = d.select("source", "doc_id", tok.alias("tok")).withColumn(
         "start_off", F.sum("tok").over(w) - F.col("tok")
     )
-    lens = spark.createDataFrame(
-        [(x,) for x in _PACK_SWEEP_LENS], "context_len long"
+    lens = local_frame(
+        spark, [(x,) for x in _PACK_SWEEP_LENS], "context_len long"
     )
     per_src = c.groupBy("source").agg(F.sum("tok").alias("src_tok"))
     seqs = (

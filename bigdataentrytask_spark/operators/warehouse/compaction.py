@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from bigdataentrytask_spark.catalog import load_table
 from bigdataentrytask_spark.operators import (
+    local_frame,
     materialize,
     operator,
     with_persisted,
@@ -321,8 +322,8 @@ def compaction_write_amp(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = per.select(
         "m", "n", F.coalesce(F.sum("n").over(w), F.lit(0)).alias("before")
     )
-    fl = spark.createDataFrame(
-        [(x,) for x in _CFS_FLOORS], "floor_rows long"
+    fl = local_frame(
+        spark, [(x,) for x in _CFS_FLOORS], "floor_rows long"
     )
     grp = (
         cum.crossJoin(F.broadcast(fl))
@@ -350,8 +351,8 @@ def compaction_write_amp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("rows_rewritten"),
     )
-    preds = spark.createDataFrame(
-        [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
+    preds = local_frame(
+        spark, [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
         "pred_id string, lo string, hi string",
     ).select(
         "pred_id",
@@ -553,8 +554,8 @@ def compaction_schedule_amortizer(
         F.coalesce(F.sum("n").over(wb), F.lit(0)).alias("before"),
         F.row_number().over(Window.orderBy("m")).alias("t"),
     )
-    fl = spark.createDataFrame(
-        [(x,) for x in _CFS_FLOORS], "floor_rows long"
+    fl = local_frame(
+        spark, [(x,) for x in _CFS_FLOORS], "floor_rows long"
     )
     wg = Window.partitionBy("floor_rows", "gid").orderBy("m")
     sched = (
@@ -805,8 +806,8 @@ def compaction_read_bill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("n").over(wb), F.lit(0)).alias("before"),
         F.row_number().over(Window.orderBy("m")).alias("t"),
     )
-    fl = spark.createDataFrame(
-        [(x,) for x in _CFS_FLOORS], "floor_rows long"
+    fl = local_frame(
+        spark, [(x,) for x in _CFS_FLOORS], "floor_rows long"
     )
     wg = Window.partitionBy("floor_rows", "gid").orderBy("m")
     sched = (
@@ -825,8 +826,8 @@ def compaction_read_bill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("MAX(m) + INTERVAL 1 MONTH").alias("g_hi"),
         F.sum("n").cast("bigint").alias("n_rows"),
     )
-    preds = spark.createDataFrame(
-        [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
+    preds = local_frame(
+        spark, [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
         "pred_id string, lo string, hi string",
     ).select(
         "pred_id",
@@ -1339,8 +1340,8 @@ def compaction_face_transfer(
     per0 = o.groupBy(
         F.date_trunc("month", "o_orderdate").alias("m")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    sc = spark.createDataFrame(
-        _CFT_SCALES, "scale string, num long, den long"
+    sc = local_frame(
+        spark, _CFT_SCALES, "scale string, num long, den long"
     )
     pers = per0.crossJoin(F.broadcast(sc)).select(
         "scale",
@@ -1365,8 +1366,8 @@ def compaction_face_transfer(
         .over(Window.partitionBy("scale").orderBy("m"))
         .alias("t"),
     )
-    fl = spark.createDataFrame(
-        [(x,) for x in _CFS_FLOORS], "floor_rows long"
+    fl = local_frame(
+        spark, [(x,) for x in _CFS_FLOORS], "floor_rows long"
     )
     wg = Window.partitionBy("scale", "floor_rows", "gid").orderBy("m")
     sched = (
@@ -1465,8 +1466,8 @@ def compaction_face_transfer(
             F.expr("MAX(m) + INTERVAL 1 MONTH").alias("g_hi"),
             F.sum("n").cast("bigint").alias("n_rows"),
         )
-        preds = spark.createDataFrame(
-            [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
+        preds = local_frame(
+            spark, [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
             "pred_id string, lo string, hi string",
         ).select(
             "pred_id",

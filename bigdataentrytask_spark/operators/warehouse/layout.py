@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdataentrytask_spark.catalog import load_table
-from bigdataentrytask_spark.operators import operator
+from bigdataentrytask_spark.operators import local_frame, operator
 from bigdataentrytask_spark.session import ensure_session_confs
 
 from bigdataentrytask_spark.operators.warehouse.core import (  # noqa: E402
@@ -925,8 +925,8 @@ def compacted_zone_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").cast("bigint").alias("n_rows"),
         )
     )
-    preds = spark.createDataFrame(
-        [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
+    preds = local_frame(
+        spark, [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
         "pred_id string, lo_s string, hi_s string",
     ).select(
         "pred_id",
@@ -1232,8 +1232,8 @@ def compaction_floor_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = per.select(
         "m", "n", F.coalesce(F.sum("n").over(w), F.lit(0)).alias("before")
     )
-    fl = spark.createDataFrame(
-        [(x,) for x in _CFS_FLOORS], "floor_rows long"
+    fl = local_frame(
+        spark, [(x,) for x in _CFS_FLOORS], "floor_rows long"
     )
     grp = (
         cum.crossJoin(F.broadcast(fl))
@@ -1255,8 +1255,8 @@ def compaction_floor_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_under_floor"),
     )
-    preds = spark.createDataFrame(
-        [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
+    preds = local_frame(
+        spark, [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
         "pred_id string, lo_s string, hi_s string",
     ).select(
         "pred_id",

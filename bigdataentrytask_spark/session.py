@@ -15,6 +15,22 @@ same posture:
   and derive microsecond timestamps ourselves (functions.time.event_ts).
 * Arrow enabled — all Python-side exchange (pandas UDFs for the
   north-star ops) rides Arrow batches, never row pickling.
+* DataFrame call-site capture off
+  (`spark.python.sql.dataFrameDebugging.enabled=false`). PySpark 4.1
+  turns it on by default and then wraps every `pyspark.sql.functions`
+  call and `Column` method: an active-session lookup, a conf read, a
+  stack walk, and a set and clear of the JVM origin. Its py4j round
+  trips add to the fixed per-op cost of small queries (turning it
+  off, together with building small frames in the JVM, cut the
+  perfbench corpus workload's `first_pass_s` by 13.9%; SCALE.md).
+  What it adds is the Python file and line of the failing call inside
+  a Spark error's query context. With it off, an error still carries
+  the Python traceback of the call that raised and the JVM error
+  class and message (e.g. `[DIVIDE_BY_ZERO]`, `[UNRESOLVED_COLUMN]`).
+  PySpark caches the flag per process at the first wrapped call (off
+  if no session is active yet, else the session's value), so it takes
+  effect when this factory builds the session before any wrapped call
+  runs under another session.
 """
 
 from __future__ import annotations
@@ -63,6 +79,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # call-site capture off: see the module docstring
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bigdataentrytask_spark.functions.time import day_bucket, minute_bucket
+from bigdataentrytask_spark.operators import local_frame
 from bigdataentrytask_spark.sinks import KeyedUpsertSink
 from bigdataentrytask_spark.streaming.replay import events_file_stream
 
@@ -77,11 +78,13 @@ def reaggregate_daily(partials_sink: KeyedUpsertSink, spark: SparkSession) -> Da
     per-(date,user) state — run per micro-batch or on demand."""
     rows = partials_sink.snapshot()
     if not rows:
-        return spark.createDataFrame(
-            [], "date_str string, time_str string, uv long, payment double"
+        return local_frame(
+            spark, [], "date_str string, time_str string, uv long, payment double"
         )
-    df = spark.createDataFrame(
-        rows, "date_str string, user_id long, time_str string, payment double"
+    df = local_frame(
+        spark,
+        rows,
+        "date_str string, user_id long, time_str string, payment double",
     )
     return (
         df.groupBy("date_str")
@@ -141,7 +144,7 @@ def run_user_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _run(q)
     rows = sink.snapshot()
-    return spark.createDataFrame(rows, "user_id long, payment double").orderBy(
+    return local_frame(spark, rows, "user_id long, payment double").orderBy(
         "user_id"
     )
 
@@ -375,8 +378,8 @@ def run_stream_static_enrichment_replay(
     )
     _run(q)
     rows = sink.snapshot()
-    return spark.createDataFrame(
-        rows, "channel string, weighted_revenue double, cnt long"
+    return local_frame(
+        spark, rows, "channel string, weighted_revenue double, cnt long"
     ).orderBy("channel")
 
 

@@ -13,6 +13,8 @@ Steps (each its own process, so Spark sessions never collide):
 
 Usage:  python scripts/roundcheck.py [--skip-bench] [--skip-layout]
                                      [--sweep-only]
+        python scripts/roundcheck.py --help
+An unknown flag exits with code 2 before any step starts.
 
 Exit code 0 only if every step passed. Honest-reporting rule: the
 summary reprints each step's verdict verbatim — a failed step is
@@ -21,6 +23,7 @@ never collapsed into a warning.
 
 from __future__ import annotations
 
+import argparse
 import json
 import re
 import subprocess
@@ -73,31 +76,40 @@ def run(label: str, cmd: list[str]) -> tuple[str, bool, float, str]:
     return label, ok, time.time() - t0, tail
 
 
+def parse_args(argv: list[str]) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--skip-bench", action="store_true",
+                    help="skip step 5 (bench.py)")
+    ap.add_argument("--skip-layout", action="store_true",
+                    help="skip the layout_scan steps")
+    ap.add_argument("--sweep-only", action="store_true",
+                    help="run only step 1 (preverify --sweep 50)")
+    return ap.parse_args(argv)
+
+
 def main(argv: list[str]) -> int:
-    skip_bench = "--skip-bench" in argv
-    skip_layout = "--skip-layout" in argv
-    sweep_only = "--sweep-only" in argv
+    args = parse_args(argv)
 
     results = []
     results.append(run("sweep-50", ["scripts/preverify.py", "--sweep", "50"]))
-    if not sweep_only:
+    if not args.sweep_only:
         for i in range(4):
             results.append(
                 run(f"chunk-{i}/4", ["scripts/preverify.py", "--chunk", str(i), "4"])
             )
-        if not skip_layout:
+        if not args.skip_layout:
             for i in range(4):
                 results.append(
                     run(f"layout-{i}/4", ["scripts/layout_scan.py", "--chunk", str(i), "4"])
                 )
         if staged_pending():
             results.append(run("staged-diff", ["scripts/preverify.py", "--staged"]))
-            if not skip_layout:
+            if not args.skip_layout:
                 results.append(run("staged-layout", ["scripts/layout_scan.py", "--staged"]))
         else:
             print("[staged] SKIP (no staged-but-unregistered operators; "
                   "the chunk audit covers the registry)")
-        if not skip_bench:
+        if not args.skip_bench:
             label, ok, dt, tail = run("bench", ["bench.py"])
             results.append((label, ok, dt, tail))
             m = re.search(r"\{.*\}", tail)
