@@ -34,11 +34,6 @@ from pyspark.sql import functions as F
 from bigdataentrytask_spark.catalog import load_table
 from bigdataentrytask_spark.functions.text import (
     LM_SCORED_CTES,
-    LSH_BANDS,
-    MERSENNE_P,
-    MINHASH_A,
-    MINHASH_B,
-    NUM_HASHES,
     lm_doc_scores,
     sql_token_hash,
     sql_tokens,
@@ -274,6 +269,19 @@ def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
+    def _heavy(counted: DataFrame, total: int) -> DataFrame:
+        """The exact threshold, share and order over the candidate
+        counts; both candidate paths end here."""
+        return materialize(
+            counted.filter(F.col("cnt") * _HH_DENOM > F.lit(total))
+            .select(
+                "tok",
+                "cnt",
+                F.round(F.col("cnt") / F.lit(float(total)), 6).alias("share"),
+            )
+            .orderBy(F.col("cnt").desc(), "tok")
+        )
+
     summaries = toks.mapInPandas(mg_kernel, schema="tok string, batch_n long")
     # ONE aggregation job over the summary (batches x capacity rows,
     # tiny at bench scale) yields both the exact corpus N (the NULL
@@ -300,15 +308,7 @@ def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         counted = toks.filter(F.col("tok").isin(cands)).groupBy("tok").agg(
             F.count(F.lit(1)).alias("cnt")
         )
-        return materialize(
-            counted.filter(F.col("cnt") * _HH_DENOM > F.lit(total))
-            .select(
-                "tok",
-                "cnt",
-                F.round(F.col("cnt") / F.lit(float(total)), 6).alias("share"),
-            )
-            .orderBy(F.col("cnt").desc(), "tok")
-        )
+        return _heavy(counted, total)
     # Candidate set too large for a plan literal: distributed path.
     from bigdataentrytask_spark.operators import with_persisted
 
@@ -324,15 +324,7 @@ def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("tok")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        return materialize(
-            counted.filter(F.col("cnt") * _HH_DENOM > F.lit(total))
-            .select(
-                "tok",
-                "cnt",
-                F.round(F.col("cnt") / F.lit(float(total)), 6).alias("share"),
-            )
-            .orderBy(F.col("cnt").desc(), "tok")
-        )
+        return _heavy(counted, total)
 
 
 # --------------------------------------------------------------------------
@@ -1039,11 +1031,6 @@ def _register_score_drift_psi() -> None:
 _register_score_drift_psi()
 
 
-# ==========================================================================
-# ROUND-11 STAGED (VERDICT r9 item 6; zero registry delta until the
-# round-11 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
-
 # --------------------------------------------------------------------------
 # Quality pruning curve: for each candidate drop fraction, what
 # pruning the bottom-f of the corpus by quality_classifier_score
@@ -1065,7 +1052,7 @@ _register_score_drift_psi()
 _PRUNE_FRACS_PPM = [100_000, 250_000, 500_000]
 
 
-def _register_quality_pruning_curve() -> dict[str, tuple]:
+def _register_quality_pruning_curve() -> None:
     from bigdataentrytask_spark.operators import ORACLES, REGISTRY
 
     oracle = f"""
@@ -1100,6 +1087,7 @@ def _register_quality_pruning_curve() -> dict[str, tuple]:
     ORDER BY drop_frac_ppm
     """
 
+    @operator("quality_pruning_curve", oracle=oracle)
     def quality_pruning_curve(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
@@ -1160,13 +1148,8 @@ def _register_quality_pruning_curve() -> dict[str, tuple]:
             .orderBy("drop_frac_ppm")
         )
 
-    return {"quality_pruning_curve": (quality_pruning_curve, oracle)}
 
-
-# Deferred assembly: the oracle composes ORACLES["quality_classifier_
-# score"], which this module registers above — build the dict at the
-# END of the module so the reference is guaranteed present.
-ROUND11_STAGED: dict[str, tuple] = _register_quality_pruning_curve()
+_register_quality_pruning_curve()
 
 
 # --------------------------------------------------------------------------
@@ -1190,7 +1173,7 @@ ROUND11_STAGED: dict[str, tuple] = _register_quality_pruning_curve()
 _THRESH_ACC = 100  # percentile_approx accuracy: rank err <= n/100
 
 
-def _register_quality_threshold_pruning() -> dict[str, tuple]:
+def _register_quality_threshold_pruning() -> None:
     from bigdataentrytask_spark.operators import ORACLES, REGISTRY, collect_bounded
 
     oracle = f"""
@@ -1224,6 +1207,7 @@ def _register_quality_threshold_pruning() -> dict[str, tuple]:
     ORDER BY drop_frac_ppm
     """
 
+    @operator("quality_threshold_pruning", oracle=oracle)
     def quality_threshold_pruning(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
@@ -1325,18 +1309,9 @@ def _register_quality_threshold_pruning() -> dict[str, tuple]:
             "kept_gap_ok boolean",
         ).orderBy("drop_frac_ppm")
 
-    return {
-        "quality_threshold_pruning": (quality_threshold_pruning, oracle)
-    }
 
+_register_quality_threshold_pruning()
 
-ROUND11_STAGED.update(_register_quality_threshold_pruning())
-
-
-# ==========================================================================
-# ROUND-12 STAGED (VERDICT r10 item 7; zero registry delta until the
-# round-12 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # Shard-mix uniformity (round-11 addition to the LLM-pipeline north
@@ -1405,6 +1380,7 @@ _SHARD_MIX_ORACLE = f"""
     """
 
 
+@operator("shard_mix_uniformity", oracle=_SHARD_MIX_ORACLE)
 def shard_mix_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-shard source-composition deviation (total variation, ppm)
     for candidate shard counts under the salted-hash assignment (see
@@ -1471,16 +1447,6 @@ def shard_mix_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("shard_count", "shard")
     )
 
-
-ROUND12_STAGED: dict[str, tuple] = {
-    "shard_mix_uniformity": (shard_mix_uniformity, _SHARD_MIX_ORACLE),
-}
-
-
-# ==========================================================================
-# ROUND-13 STAGED (VERDICT r11 item 6; zero registry delta until the
-# round-13 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # Stratified shard assignment twin (ROADMAP round-13, the fix
@@ -1574,6 +1540,7 @@ _STRAT_TWIN_ORACLE = f"""
     """
 
 
+@operator("shard_stratified_twin", oracle=_STRAT_TWIN_ORACLE)
 def shard_stratified_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted-hash vs round-robin-per-source shard assignment, priced
     as per-(shard_count, policy) mean/max total-variation ppm against
@@ -1677,16 +1644,6 @@ def shard_stratified_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("shard_count", "policy")
     )
 
-
-ROUND13_STAGED: dict[str, tuple] = {
-    "shard_stratified_twin": (shard_stratified_twin, _STRAT_TWIN_ORACLE),
-}
-
-
-# ==========================================================================
-# ROUND-14 STAGED (ROADMAP §"Round 14+"; zero registry delta until the
-# round-14 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # Gate-stacking ledger (ROADMAP round-14 "Curation"): the single-gate
@@ -1794,6 +1751,7 @@ def _gsl_oracle() -> str:
     ).replace("{GSL_QUALITY}", ORACLES["quality_classifier_score"])
 
 
+@operator("gate_stacking_ledger", oracle=_gsl_oracle())
 def gate_stacking_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source doc/token survivorship through the stacked corpus
     funnel: exact dedup -> per-(lang, source) perplexity gate ->
@@ -1895,11 +1853,6 @@ def gate_stacking_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-ROUND14_STAGED: dict[str, tuple] = {
-    "gate_stacking_ledger": (gate_stacking_ledger, _gsl_oracle()),
-}
 
 
 # --------------------------------------------------------------------------
@@ -2015,6 +1968,7 @@ def _fos_oracle() -> str:
     ).replace("{FOS_QUALITY}", ORACLES["quality_classifier_score"])
 
 
+@operator("funnel_order_sensitivity", oracle=_fos_oracle())
 def funnel_order_sensitivity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2117,12 +2071,6 @@ def funnel_order_sensitivity(
         )
         .orderBy("source")
     )
-
-
-ROUND14_STAGED["funnel_order_sensitivity"] = (
-    funnel_order_sensitivity,
-    _fos_oracle(),
-)
 
 
 # --------------------------------------------------------------------------
@@ -2232,6 +2180,7 @@ def _ftp_oracle() -> str:
     ).replace("{FTP_QUALITY}", ORACLES["quality_classifier_score"])
 
 
+@operator("funnel_threshold_provenance", oracle=_ftp_oracle())
 def funnel_threshold_provenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2330,508 +2279,3 @@ def funnel_threshold_provenance(
         )
         .orderBy("lang", "source")
     )
-
-
-ROUND14_STAGED["funnel_threshold_provenance"] = (
-    funnel_threshold_provenance,
-    _ftp_oracle(),
-)
-
-
-# ==========================================================================
-# ROUND-15 STAGED (ROADMAP §"Round 15+"; zero registry delta until the
-# round-15 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
-
-# --------------------------------------------------------------------------
-# Boundary-doc margin audit (ROADMAP round-15 "Curation / data
-# quality"): funnel_order_sensitivity certified order-insensitivity
-# at sf0.01 and pinned divergence at sf0.001 — a boolean. This table
-# prices the MARGIN behind that boolean: per (lang, source), the
-# perplexity gate's boundary doc (the rank n_grp*frac//1e6 + 1 doc
-# whose score BECOMES the threshold), how many quality-cut docs sit
-# at or below that rank (each one shifts the threshold when the
-# quality gate runs first), and the distance in docs from the
-# boundary to the NEAREST quality-cut doc. margin_docs == NULL means
-# the group has no quality-cut doc at all (threshold provably
-# order-immune); a large margin means order-insensitivity is
-# comfortable, margin 0-1 means one reordering flips the threshold —
-# fragility as a number, not a boolean.
-# Exact math: the LM is the shared integer-grid scorer
-# (functions.text.LM_SCORED_CTES); ranks and distances are integers;
-# no rounding at all in this table.
-# Scale: the LM's two bigram-count joins + one (lang, source) rank +
-# one doc_id join against the quality scorer; everything after is
-# group-domain-sized.
-# --------------------------------------------------------------------------
-_BDM_ORACLE = f"""
-    WITH {LM_SCORED_CTES}    tagged AS (
-      SELECT d2.lang, d2.source, s.doc_id, s.score_e6,
-             ROW_NUMBER() OVER (PARTITION BY d2.lang, d2.source
-                                ORDER BY s.score_e6, s.doc_id) AS rn,
-             COUNT(*) OVER (PARTITION BY d2.lang, d2.source) AS n_grp
-      FROM scored s JOIN documents d2 ON d2.doc_id = s.doc_id
-    ),
-    bdoc AS (
-      SELECT lang, source, n_grp, rn AS boundary_rn,
-             doc_id AS boundary_doc_id
-      FROM tagged
-      WHERE rn = n_grp * {_GSL_FRAC_PPM} // 1000000 + 1
-    ),
-    q AS ({{BDM_QUALITY}}),
-    qcut AS (
-      SELECT t.lang, t.source, t.rn
-      FROM tagged t JOIN q ON q.doc_id = t.doc_id
-      WHERE NOT q.keep
-    ),
-    qagg AS (
-      SELECT qc.lang, qc.source,
-             CAST(COUNT(*) AS BIGINT) AS n_quality_cut,
-             CAST(count_if(qc.rn <= b.boundary_rn) AS BIGINT)
-               AS n_qcut_at_or_below,
-             CAST(MIN(ABS(qc.rn - b.boundary_rn)) AS BIGINT)
-               AS margin_docs
-      FROM qcut qc
-      JOIN bdoc b ON b.lang = qc.lang AND b.source = qc.source
-      GROUP BY 1, 2
-    )
-    SELECT b.lang, b.source, CAST(b.n_grp AS BIGINT) AS n_grp,
-           CAST(b.boundary_rn AS BIGINT) AS boundary_rn,
-           b.boundary_doc_id,
-           CAST(COALESCE(qa.n_quality_cut, 0) AS BIGINT)
-             AS n_quality_cut,
-           CAST(COALESCE(qa.n_qcut_at_or_below, 0) AS BIGINT)
-             AS n_qcut_at_or_below,
-           qa.margin_docs
-    FROM bdoc b
-    LEFT JOIN qagg qa ON qa.lang = b.lang AND qa.source = b.source
-    ORDER BY b.lang, b.source
-    """
-
-
-def _bdm_oracle() -> str:
-    """Late-compose the quality CTE (ORACLES is populated by the
-    decorators above in this module)."""
-    from bigdataentrytask_spark.operators import ORACLES
-
-    return _BDM_ORACLE.replace(
-        "{BDM_QUALITY}", ORACLES["quality_classifier_score"]
-    )
-
-
-def boundary_doc_margin_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-(lang, source) perplexity-gate boundary doc, the count of
-    quality-cut docs at or below it, and the rank distance to the
-    nearest quality-cut doc (see block comment)."""
-    from pyspark.sql import Window
-
-    from bigdataentrytask_spark.operators import REGISTRY
-
-    d = _docs(spark, sf_dir)
-    scored = lm_doc_scores(d)
-    ws = Window.partitionBy("lang", "source").orderBy(
-        "score_e6", "doc_id"
-    )
-    tagged = (
-        scored.join(d.select("doc_id", "lang", "source"), "doc_id")
-        .select(
-            "lang",
-            "source",
-            "doc_id",
-            "score_e6",
-            F.row_number().over(ws).alias("rn"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("lang", "source"))
-            .alias("n_grp"),
-        )
-    )
-    bdoc = tagged.filter(
-        F.col("rn")
-        == F.floor(F.col("n_grp") * _GSL_FRAC_PPM / 1000000) + 1
-    ).select(
-        "lang",
-        "source",
-        "n_grp",
-        F.col("rn").alias("boundary_rn"),
-        F.col("doc_id").alias("boundary_doc_id"),
-    )
-    qcut = tagged.join(
-        REGISTRY["quality_classifier_score"](spark, sf_dir)
-        .filter(~F.col("keep"))
-        .select("doc_id"),
-        "doc_id",
-    ).select("lang", "source", "rn")
-    qagg = (
-        qcut.join(
-            F.broadcast(
-                bdoc.select("lang", "source", "boundary_rn")
-            ),
-            ["lang", "source"],
-        )
-        .groupBy("lang", "source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_quality_cut"),
-            F.sum(
-                (F.col("rn") <= F.col("boundary_rn")).cast("long")
-            )
-            .cast("bigint")
-            .alias("n_qcut_at_or_below"),
-            F.min(F.abs(F.col("rn") - F.col("boundary_rn")))
-            .cast("bigint")
-            .alias("margin_docs"),
-        )
-    )
-    return (
-        bdoc.join(qagg, ["lang", "source"], "left")
-        .select(
-            "lang",
-            "source",
-            F.col("n_grp").cast("bigint").alias("n_grp"),
-            F.col("boundary_rn").cast("bigint").alias("boundary_rn"),
-            "boundary_doc_id",
-            F.coalesce("n_quality_cut", F.lit(0))
-            .cast("bigint")
-            .alias("n_quality_cut"),
-            F.coalesce("n_qcut_at_or_below", F.lit(0))
-            .cast("bigint")
-            .alias("n_qcut_at_or_below"),
-            "margin_docs",
-        )
-        .orderBy("lang", "source")
-    )
-
-
-# --------------------------------------------------------------------------
-# Gate overlap matrix (funnel follow-on): gate_stacking_ledger
-# prices the funnel SEQUENTIALLY (each gate sees the previous gate's
-# survivors); this table prices the three gates INDEPENDENTLY on the
-# raw corpus — near-dup drop (non-keeper within the minhash band-0
-# LSH bucket, min-doc_id keeper — dedup_quality_survivorship's
-# verified bucketing; the documents fixture has NO byte-exact
-# duplicates, asserted in the staged test, so an exact-dup axis
-# would be dead), perplexity drop (the per-(lang, source) decile
-# gate on the FULL corpus), quality drop (classifier keep = false) —
-# and partitions every document by its exact drop combination
-# ('---' kept by all three ... 'dpq' dropped by all three). The
-# exclusive Venn partition reads directly as gate redundancy: mass
-# in 'dp-', 'd-q', '-pq', 'dpq' is work two gates both paid for; a
-# gate whose single-letter row is near-empty adds nothing the
-# others don't already catch.
-# Exact math: three boolean flags per doc, integer counts; the one
-# ppm rounding per row.
-# Scale: one tokenize->hash->min pass (4 of the 32 sketches) + one
-# bucket-key shuffle for the near-dup gate, the shared LM's two
-# count joins, one quality join — three doc_id-keyed left joins and
-# a combo rollup; no pair enumeration.
-# --------------------------------------------------------------------------
-_GOM_RPB = NUM_HASHES // LSH_BANDS  # band-0 width (dedup._ROWS_PER_BAND)
-_GOM_MH_COLS = ",\n             ".join(
-    f"MIN(({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {MERSENNE_P})"
-    f" AS mh{i}"
-    for i in range(_GOM_RPB)
-)
-_GOM_BKEY = " || ':' || ".join(
-    f"CAST(mh{i} AS VARCHAR)" for i in range(_GOM_RPB)
-)
-
-_GOM_ORACLE = f"""
-    WITH dt AS (
-      SELECT doc_id, UNNEST(list_distinct({sql_tokens('text')})) AS tok
-      FROM documents
-    ),
-    dh AS (SELECT doc_id, {sql_token_hash('tok')} AS h FROM dt),
-    b0 AS (
-      SELECT doc_id,
-             {_GOM_MH_COLS}
-      FROM dh GROUP BY doc_id
-    ),
-    keepn AS (
-      SELECT MIN(doc_id) AS doc_id
-      FROM b0 GROUP BY ({_GOM_BKEY})
-    ),
-    {LM_SCORED_CTES}    tagged AS (
-      SELECT d2.lang, d2.source, s.doc_id, s.score_e6,
-             ROW_NUMBER() OVER (PARTITION BY d2.lang, d2.source
-                                ORDER BY s.score_e6, s.doc_id) AS rn,
-             COUNT(*) OVER (PARTITION BY d2.lang, d2.source) AS n_grp
-      FROM scored s JOIN documents d2 ON d2.doc_id = s.doc_id
-    ),
-    cut AS (
-      SELECT lang, source,
-             MIN(CASE WHEN rn > n_grp * {_GSL_FRAC_PPM} // 1000000
-                      THEN score_e6 END) AS th
-      FROM tagged GROUP BY 1, 2
-    ),
-    ppl AS (
-      SELECT t.doc_id
-      FROM tagged t
-      JOIN cut c ON c.lang = t.lang AND c.source = t.source
-      WHERE t.score_e6 < c.th
-    ),
-    q AS ({{GOM_QUALITY}}),
-    m AS (
-      SELECT d.doc_id,
-             (k.doc_id IS NULL) AS gd,
-             (p.doc_id IS NOT NULL) AS gp,
-             (NOT COALESCE(q.keep, TRUE)) AS gq
-      FROM documents d
-      LEFT JOIN keepn k ON k.doc_id = d.doc_id
-      LEFT JOIN ppl p ON p.doc_id = d.doc_id
-      LEFT JOIN q ON q.doc_id = d.doc_id
-    ),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents)
-    SELECT CONCAT(CASE WHEN gd THEN 'd' ELSE '-' END,
-                  CASE WHEN gp THEN 'p' ELSE '-' END,
-                  CASE WHEN gq THEN 'q' ELSE '-' END) AS combo,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(ROUND(COUNT(*) * 1000000.0 / MAX(tot.n)) AS BIGINT)
-             AS share_ppm
-    FROM m CROSS JOIN tot
-    GROUP BY 1
-    ORDER BY combo
-    """
-
-
-def _gom_oracle() -> str:
-    from bigdataentrytask_spark.operators import ORACLES
-
-    return _GOM_ORACLE.replace(
-        "{GOM_QUALITY}", ORACLES["quality_classifier_score"]
-    )
-
-
-def gate_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exclusive Venn partition of the corpus by independent
-    dedup / perplexity / quality drop flags (see block comment)."""
-    from pyspark.sql import Window
-
-    from bigdataentrytask_spark.operators import REGISTRY
-
-    d = _docs(spark, sf_dir)
-    dh = d.select(
-        "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("tok")
-    ).select("doc_id", token_hash("tok").alias("h"))
-    b0 = dh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(MINHASH_A[i]) * F.col("h") + F.lit(MINHASH_B[i]))
-                % MERSENNE_P
-            ).alias(f"mh{i}")
-            for i in range(_GOM_RPB)
-        ]
-    )
-    keep1 = (
-        b0.groupBy(*[f"mh{i}" for i in range(_GOM_RPB)])
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id", F.lit(True).alias("kd"))
-    )
-    scored = lm_doc_scores(d)
-    ws = Window.partitionBy("lang", "source").orderBy(
-        "score_e6", "doc_id"
-    )
-    tagged = (
-        scored.join(d.select("doc_id", "lang", "source"), "doc_id")
-        .select(
-            "lang",
-            "source",
-            "doc_id",
-            "score_e6",
-            F.row_number().over(ws).alias("rn"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("lang", "source"))
-            .alias("n_grp"),
-        )
-    )
-    cut = tagged.groupBy("lang", "source").agg(
-        F.min(
-            F.when(
-                F.col("rn")
-                > F.floor(F.col("n_grp") * _GSL_FRAC_PPM / 1000000),
-                F.col("score_e6"),
-            )
-        ).alias("th")
-    )
-    ppl = (
-        tagged.join(F.broadcast(cut), ["lang", "source"])
-        .filter(F.col("score_e6") < F.col("th"))
-        .select("doc_id", F.lit(True).alias("gp"))
-    )
-    qk = REGISTRY["quality_classifier_score"](spark, sf_dir).select(
-        "doc_id", F.col("keep").alias("qkeep")
-    )
-    flags = (
-        d.select("doc_id")
-        .join(keep1, "doc_id", "left")
-        .join(ppl, "doc_id", "left")
-        .join(qk, "doc_id", "left")
-        .select(
-            F.col("kd").isNull().alias("gd"),
-            F.coalesce("gp", F.lit(False)).alias("gp"),
-            (~F.coalesce("qkeep", F.lit(True))).alias("gq"),
-        )
-    )
-    combo = F.concat(
-        F.when(F.col("gd"), F.lit("d")).otherwise(F.lit("-")),
-        F.when(F.col("gp"), F.lit("p")).otherwise(F.lit("-")),
-        F.when(F.col("gq"), F.lit("q")).otherwise(F.lit("-")),
-    )
-    tot = d.agg(F.count(F.lit(1)).alias("n"))
-    return (
-        flags.select(combo.alias("combo"))
-        .groupBy("combo")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "combo",
-            "n_docs",
-            F.round(F.col("n_docs") * 1000000.0 / F.col("n"))
-            .cast("bigint")
-            .alias("share_ppm"),
-        )
-        .orderBy("combo")
-    )
-
-
-# --------------------------------------------------------------------------
-# Perplexity-threshold pooling ablation (funnel follow-on): the
-# module's gate learns one threshold per (lang, source) — the CCNet
-# convention. The cheap alternative pools per LANGUAGE (one decile
-# cut over all of a language's docs regardless of source). This
-# table prices the difference per (lang, source): both thresholds,
-# kept counts under each, and the signed delta — positive delta
-# means the pooled cut is LOOSER for that source (its docs score
-# above the language's decile), negative means pooling would
-# over-prune it. A source with a large |delta| is exactly where the
-# per-source convention earns its extra threshold table.
-# Exact math: shared integer-grid LM; exact discrete percentiles on
-# both groupings; integer counts; no rounding.
-# Scale: the LM's two count joins + TWO rank passes (one
-# (lang, source)-keyed, one lang-keyed) over the same scored frame;
-# output is group-domain-sized.
-# --------------------------------------------------------------------------
-_PTP_ORACLE = f"""
-    WITH {LM_SCORED_CTES}    tagged AS (
-      SELECT d2.lang, d2.source, s.doc_id, s.score_e6,
-             ROW_NUMBER() OVER (PARTITION BY d2.lang, d2.source
-                                ORDER BY s.score_e6, s.doc_id) AS rn,
-             COUNT(*) OVER (PARTITION BY d2.lang, d2.source) AS n_grp,
-             ROW_NUMBER() OVER (PARTITION BY d2.lang
-                                ORDER BY s.score_e6, s.doc_id) AS rn_l,
-             COUNT(*) OVER (PARTITION BY d2.lang) AS n_lang
-      FROM scored s JOIN documents d2 ON d2.doc_id = s.doc_id
-    ),
-    cut_own AS (
-      SELECT lang, source,
-             MIN(CASE WHEN rn > n_grp * {_GSL_FRAC_PPM} // 1000000
-                      THEN score_e6 END) AS th_own
-      FROM tagged GROUP BY 1, 2
-    ),
-    cut_lang AS (
-      SELECT lang,
-             MIN(CASE WHEN rn_l > n_lang * {_GSL_FRAC_PPM} // 1000000
-                      THEN score_e6 END) AS th_pool
-      FROM tagged GROUP BY 1
-    )
-    SELECT t.lang, t.source,
-           CAST(MAX(t.n_grp) AS BIGINT) AS n_grp,
-           CAST(MAX(co.th_own) AS BIGINT) AS th_own_e6,
-           CAST(MAX(cl.th_pool) AS BIGINT) AS th_pooled_e6,
-           CAST(count_if(t.score_e6 >= co.th_own) AS BIGINT)
-             AS kept_own,
-           CAST(count_if(t.score_e6 >= cl.th_pool) AS BIGINT)
-             AS kept_pooled,
-           CAST(count_if(t.score_e6 >= cl.th_pool) AS BIGINT)
-           - CAST(count_if(t.score_e6 >= co.th_own) AS BIGINT)
-             AS delta_docs
-    FROM tagged t
-    JOIN cut_own co ON co.lang = t.lang AND co.source = t.source
-    JOIN cut_lang cl ON cl.lang = t.lang
-    GROUP BY t.lang, t.source
-    ORDER BY t.lang, t.source
-    """
-
-
-def ppl_threshold_pooling_ablation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-(lang, source) kept counts under the own-group decile
-    threshold vs a per-language pooled threshold, with the signed
-    pooling delta (see block comment)."""
-    from pyspark.sql import Window
-
-    d = _docs(spark, sf_dir)
-    scored = lm_doc_scores(d)
-    ws = Window.partitionBy("lang", "source").orderBy(
-        "score_e6", "doc_id"
-    )
-    wl = Window.partitionBy("lang").orderBy("score_e6", "doc_id")
-    tagged = (
-        scored.join(d.select("doc_id", "lang", "source"), "doc_id")
-        .select(
-            "lang",
-            "source",
-            "doc_id",
-            "score_e6",
-            F.row_number().over(ws).alias("rn"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("lang", "source"))
-            .alias("n_grp"),
-            F.row_number().over(wl).alias("rn_l"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("lang"))
-            .alias("n_lang"),
-        )
-    )
-    cut_own = tagged.groupBy("lang", "source").agg(
-        F.min(
-            F.when(
-                F.col("rn")
-                > F.floor(F.col("n_grp") * _GSL_FRAC_PPM / 1000000),
-                F.col("score_e6"),
-            )
-        ).alias("th_own")
-    )
-    cut_lang = tagged.groupBy("lang").agg(
-        F.min(
-            F.when(
-                F.col("rn_l")
-                > F.floor(F.col("n_lang") * _GSL_FRAC_PPM / 1000000),
-                F.col("score_e6"),
-            )
-        ).alias("th_pool")
-    )
-    kept_own = F.sum(
-        (F.col("score_e6") >= F.col("th_own")).cast("long")
-    ).cast("bigint")
-    kept_pool = F.sum(
-        (F.col("score_e6") >= F.col("th_pool")).cast("long")
-    ).cast("bigint")
-    return (
-        tagged.join(F.broadcast(cut_own), ["lang", "source"])
-        .join(F.broadcast(cut_lang), "lang")
-        .groupBy("lang", "source")
-        .agg(
-            F.max("n_grp").cast("bigint").alias("n_grp"),
-            F.max("th_own").cast("bigint").alias("th_own_e6"),
-            F.max("th_pool").cast("bigint").alias("th_pooled_e6"),
-            kept_own.alias("kept_own"),
-            kept_pool.alias("kept_pooled"),
-            (kept_pool - kept_own).alias("delta_docs"),
-        )
-        .orderBy("lang", "source")
-    )
-
-
-ROUND15_STAGED: dict[str, tuple] = {
-    "boundary_doc_margin_audit": (
-        boundary_doc_margin_audit,
-        _bdm_oracle(),
-    ),
-    "gate_overlap_matrix": (gate_overlap_matrix, _gom_oracle()),
-    "ppl_threshold_pooling_ablation": (
-        ppl_threshold_pooling_ablation,
-        _PTP_ORACLE,
-    ),
-}

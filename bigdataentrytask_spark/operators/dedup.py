@@ -1931,8 +1931,6 @@ _register_bbit_minhash_accuracy()
 
 
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (registry FROZEN in round 9 — VERDICT r8 items 2/6).
-#
 # Exact-substring dedup audit, Lee et al. 2022 ("Deduplicating Training
 # Data Makes Language Models Better", arXiv:2107.06499) — the suffix-
 # array ExactSubstr pass, re-expressed Spark-first. The SA enumerates
@@ -2006,8 +2004,9 @@ _SUBSTRING_DEDUP_ORACLE = f"""
     """
 
 
+@operator("substring_dedup_audit", oracle=_SUBSTRING_DEDUP_ORACLE)
 def substring_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document exact-substring duplication census (see the staged
+    """Per-document exact-substring duplication census (see the
     block comment above for semantics, scale contract, and the
     suffix-array equivalence argument)."""
     L = _SUBSTR_L
@@ -2097,25 +2096,14 @@ def substring_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# name -> (fn, oracle). Aggregated by operators/staging.py and
-# registered by its register_all() at the round-10 boundary (after the
-# freeze lifts); until then the functions are importable and
-# differential-tested (tests/test_round9_staged.py) but contribute
-# ZERO registry delta.
-ROUND10_STAGED: dict[str, tuple] = {
-    "substring_dedup_audit": (substring_dedup_audit, _SUBSTRING_DEDUP_ORACLE),
-}
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (ROADMAP "Curation / dedup depth"): URL/domain-level
-# dedup + frontier statistics. The corpus has no URL column, so one is
-# DERIVED deterministically from (doc_id, source) — host
-# h{doc_id%7}.{source}{doc_id%13}.example.com, path /p/{doc_id} — and
-# then PARSED back (split_part for the host, a leftmost-label strip
-# for the registrable domain), exercising the real crawl-frontier
-# plumbing: host extraction, domain rollup, per-host load, and exact
-# within-domain text duplication (the crawler-trap signal).
+# URL/domain-level dedup + frontier statistics. The corpus has no URL
+# column, so one is DERIVED deterministically from (doc_id, source) — host
+# h{doc_id%7}.{source}{doc_id%13}.example.com, path /p/{doc_id} — and then
+# PARSED back (split_part for the host, a leftmost-label strip for the
+# registrable domain), exercising the real crawl-frontier plumbing: host
+# extraction, domain rollup, per-host load, and exact within-domain text
+# duplication (the crawler-trap signal).
 #
 # Scale: two keyed aggregations (domain+host, domain+text) then a
 # domain-level rollup — all partial-aggregated map-side; output is
@@ -2168,8 +2156,9 @@ _URL_FRONTIER_ORACLE = r"""
     """
 
 
+@operator("url_host_frontier_stats", oracle=_URL_FRONTIER_ORACLE)
 def url_host_frontier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-frontier census over the derived URL column (see staged
+    """Crawl-frontier census over the derived URL column (see
     block comment for derivation, semantics, and the 100 TB notes)."""
     d = _docs(spark, sf_dir).select("doc_id", "text", "source")
     u = d.select(
@@ -2220,17 +2209,11 @@ def url_host_frontier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND10_STAGED["url_host_frontier_stats"] = (
-    url_host_frontier_stats,
-    _URL_FRONTIER_ORACLE,
-)
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (ROADMAP "Curation / dedup depth"): cross-lingual
-# near-dup evaluation. Candidate pairs come from the SAME minhash/LSH
-# machinery minhash_dedup ships (NUM_HASHES sketches, LSH_BANDS bands,
-# est >= MINHASH_THRESHOLD), restricted to pairs that SPAN LANGUAGES
+# Cross-lingual near-dup evaluation. Candidate pairs come from the SAME
+# minhash/LSH machinery minhash_dedup ships (NUM_HASHES sketches,
+# LSH_BANDS bands, est >= MINHASH_THRESHOLD), restricted to pairs that
+# SPAN LANGUAGES
 # (lang_a <> lang_b) over the language-normalized token stream — for
 # this corpus the shared tokenize/normalize helpers in functions/text
 # ARE the normalizer (the synthetic langs share a vocabulary, so
@@ -2321,9 +2304,10 @@ _XLING_ORACLE = f"""
     """
 
 
+@operator("crosslingual_neardup_eval", oracle=_XLING_ORACLE)
 def crosslingual_neardup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-language minhash/LSH dedup quality vs the exact per-
-    language-pair truth (see staged block comment)."""
+    language-pair truth (see block comment)."""
     d = _docs(spark, sf_dir)
     langs = d.select("doc_id", "lang")
     toks = d.select(
@@ -2465,19 +2449,6 @@ def crosslingual_neardup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND10_STAGED["crosslingual_neardup_eval"] = (
-    crosslingual_neardup_eval,
-    _XLING_ORACLE,
-)
-
-
-# ==========================================================================
-# ROUND-11 STAGED (VERDICT r9 item 6: stage-then-activate; zero
-# registry delta until the round-11 boundary). Aggregated by
-# operators/staging.py STAGED; differential-tested in
-# tests/test_round10_staged.py through the preverify pandas gate.
-# ==========================================================================
-
 # --------------------------------------------------------------------------
 # Substring dedup — PRODUCTION twin (VERDICT r9 item 6; the scale
 # contract above substring_dedup_audit names exactly this variant):
@@ -2493,6 +2464,7 @@ ROUND10_STAGED["crosslingual_neardup_eval"] = (
 # Reference parity: the reference has no substring dedup (extension
 # per VERDICT r8 item 6).
 # --------------------------------------------------------------------------
+@operator("substring_dedup_prod", oracle=_SUBSTRING_DEDUP_ORACLE)
 def substring_dedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """xxhash64-payload substring-duplication census (production twin
     of substring_dedup_audit — see block comment for the collision-
@@ -2619,6 +2591,7 @@ _DEDUP_ORDER_ORACLE = """
     """
 
 
+@operator("dedup_order_sensitivity", oracle=_DEDUP_ORDER_ORACLE)
 def dedup_order_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keeper-identity drift between id-order and source-priority
     exact dedup (see block comment). One text-group shuffle computes
@@ -2708,6 +2681,7 @@ _CONTAM_CROSSTAB_ORACLE = f"""
     """
 
 
+@operator("contamination_source_crosstab", oracle=_CONTAM_CROSSTAB_ORACLE)
 def contamination_source_crosstab(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2781,22 +2755,6 @@ def contamination_source_crosstab(
     )
 
 
-# name -> (fn, oracle); aggregated by operators/staging.py STAGED
-# (the PENDING set — preverify --staged / layout_scan --staged gate
-# these before the round-11 boundary registers them).
-ROUND11_STAGED: dict[str, tuple] = {
-    "substring_dedup_prod": (substring_dedup_prod, _SUBSTRING_DEDUP_ORACLE),
-    "dedup_order_sensitivity": (
-        dedup_order_sensitivity,
-        _DEDUP_ORDER_ORACLE,
-    ),
-    "contamination_source_crosstab": (
-        contamination_source_crosstab,
-        _CONTAM_CROSSTAB_ORACLE,
-    ),
-}
-
-
 # --------------------------------------------------------------------------
 # Cross-source duplicate flow (ROADMAP round-12, pulled forward):
 # for every unordered source pair, how many DISTINCT aligned
@@ -2852,6 +2810,7 @@ _XSRC_FLOW_ORACLE = f"""
     """
 
 
+@operator("cross_source_duplicate_flow", oracle=_XSRC_FLOW_ORACLE)
 def cross_source_duplicate_flow(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2924,17 +2883,6 @@ def cross_source_duplicate_flow(
     )
 
 
-ROUND11_STAGED["cross_source_duplicate_flow"] = (
-    cross_source_duplicate_flow,
-    _XSRC_FLOW_ORACLE,
-)
-
-
-# ==========================================================================
-# ROUND-12 STAGED (VERDICT r10 item 7; zero registry delta until the
-# round-12 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
-
 # --------------------------------------------------------------------------
 # Duplicate-decay mixture (ROADMAP round-12 "Curation"): the
 # dedup-aware sibling of domain_mix_planner, computed at the CHUNK
@@ -2995,6 +2943,7 @@ _DECAY_MIX_ORACLE = f"""
     """
 
 
+@operator("duplicate_decay_mixture", oracle=_DECAY_MIX_ORACLE)
 def duplicate_decay_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per duplicate-cluster-size token-mass reweighting table at the
     10-word-chunk grain (see block comment): raw vs keep-one-copy
@@ -3118,6 +3067,7 @@ _DECAY_SRC_ORACLE = f"""
     """
 
 
+@operator("chunk_decay_source_mix", oracle=_DECAY_SRC_ORACLE)
 def chunk_decay_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token share before vs after first-occurrence chunk
     dedup (see block comment): the signed mix shift a dedup pass
@@ -3182,19 +3132,6 @@ def chunk_decay_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("source")
     )
 
-
-# name -> (fn, oracle); aggregated by operators/staging.py STAGED
-# (the PENDING round-12 set).
-ROUND12_STAGED: dict[str, tuple] = {
-    "duplicate_decay_mixture": (duplicate_decay_mixture, _DECAY_MIX_ORACLE),
-    "chunk_decay_source_mix": (chunk_decay_source_mix, _DECAY_SRC_ORACLE),
-}
-
-
-# ==========================================================================
-# ROUND-13 STAGED (VERDICT r11 item 6; zero registry delta until the
-# round-13 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # Quality-priority dedup survivorship (ROADMAP round-13 "Curation"):
@@ -3282,6 +3219,7 @@ def _qsurv_oracle() -> str:
     """
 
 
+@operator("dedup_quality_survivorship", oracle=_qsurv_oracle())
 def dedup_quality_survivorship(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3445,6 +3383,12 @@ def _band_sweep_oracle() -> str:
     """
 
 
+@operator(
+    "lsh_band_width_sweep",
+    oracle=_band_sweep_oracle().replace(
+        "{JACCARD_TRUTH}", _ORACLES_D13["jaccard_pairs"]
+    ),
+)
 def lsh_band_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Re-band the verified 32-sketch minhash signatures into three
     (bands, rows) splits and price candidate volume vs sliced exact-
@@ -3612,17 +3556,3 @@ def lsh_band_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .orderBy(F.col("bands").desc())
             )
             return materialize(out)
-
-
-ROUND13_STAGED: dict[str, tuple] = {
-    "dedup_quality_survivorship": (
-        dedup_quality_survivorship,
-        _qsurv_oracle(),
-    ),
-    "lsh_band_width_sweep": (
-        lsh_band_width_sweep,
-        _band_sweep_oracle().replace(
-            "{JACCARD_TRUTH}", _ORACLES_D13["jaccard_pairs"]
-        ),
-    ),
-}

@@ -16,6 +16,7 @@ from bigdataentrytask_spark.functions.vector import (  # noqa: F401
     stack_f64,
 )
 from bigdataentrytask_spark.operators import (  # noqa: F401
+    ORACLES as _REG_ORACLES,
     local_frame,
     materialize,
     operator,
@@ -99,7 +100,6 @@ from bigdataentrytask_spark.operators.similarity.diagnostics import (  # noqa: F
     _MATRYOSHKA_DIMS,
     _MATRYOSHKA_ORACLE,
     matryoshka_recall_sweep,
-    ROUND10_STAGED,
 )
 
 from bigdataentrytask_spark.operators.similarity.quantization import (  # noqa: F401,E501
@@ -121,7 +121,6 @@ from bigdataentrytask_spark.operators.similarity.quantization import (  # noqa: 
     asymmetric_binary_retrieval,
     _TWO_HOP_ORACLE,
     two_hop_expansion_ceiling,
-    ROUND11_STAGED,
     _pareto_oracle,
     quantization_pareto_table,
     _PROBE_RADII,
@@ -134,12 +133,6 @@ from bigdataentrytask_spark.operators.similarity.quantization import (  # noqa: 
     ivf_adc_recall,
 )
 
-
-
-# ==========================================================================
-# ROUND-12 STAGED (VERDICT r10 item 7; zero registry delta until the
-# round-12 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # IVF cell-balance audit (ROADMAP round-12 "Retrieval"): the
@@ -189,6 +182,7 @@ _CELL_BALANCE_ORACLE = f"""
     """
 
 
+@operator("ivf_cell_balance_audit", oracle=_CELL_BALANCE_ORACLE)
 def ivf_cell_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell population census of the IVF coarse quantizer (see
     block comment): skew here is the mechanism behind nprobe recall
@@ -409,6 +403,7 @@ _LLOYD_ORACLE = f"""
     """
 
 
+@operator("pq_lloyd_refinement", oracle=_LLOYD_ORACLE)
 def pq_lloyd_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd step on the PQ subspace codebook, priced end-to-end
     (see block comment): distortion, dead codes, and ADC recall for
@@ -739,6 +734,13 @@ _CBR_ORACLE = f"""
     """
 
 
+@operator(
+    "candidate_budget_recall",
+    oracle=_CBR_ORACLE.replace("{SQL_PLANES}", _sql_planes())
+    .replace("{SQL_CODES}", _SQL_CODES.strip())
+    .replace("{IVF_CTES}", _IVF_CTES)
+    .replace("{KNN_TRUTH}", _REG_ORACLES["knn_bruteforce"]),
+)
 def candidate_budget_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH vs IVF recall at a FIXED exact-scoring candidate budget
     (see block comment): superset pairs scored once, every
@@ -1004,6 +1006,7 @@ _SEED_SPREAD_ORACLE = f"""
     """
 
 
+@operator("seed_spread_advisor", oracle=_SEED_SPREAD_ORACLE)
 def seed_spread_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-K vs strided-K coarse-quantizer seeding, priced as seed
     spread, assignment distortion, and max cell share (see block
@@ -1208,6 +1211,7 @@ _LLOYD_CONV_ORACLE = f"""
     """
 
 
+@operator("pq_lloyd_convergence", oracle=_LLOYD_CONV_ORACLE)
 def pq_lloyd_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distortion trajectory over _LLOYD_STEPS Lloyd iterations of the
     PQ codebook (see block comment): the diminishing-returns curve."""
@@ -1481,6 +1485,10 @@ _IVF_ADC_LLOYD_ORACLE = f"""
     """
 
 
+@operator(
+    "ivf_adc_lloyd_recall",
+    oracle=_IVF_ADC_LLOYD_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
+)
 def ivf_adc_lloyd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC nprobe sweep under the one-Lloyd-step PQ codebook (see
     block comment; plan identical to ivf_adc_recall plus the
@@ -1737,29 +1745,3 @@ def ivf_adc_lloyd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("nprobe")
         )
-
-
-from bigdataentrytask_spark.operators import ORACLES as _REG_ORACLES  # noqa: E402
-
-ROUND12_STAGED: dict[str, tuple] = {
-    "ivf_cell_balance_audit": (
-        ivf_cell_balance_audit,
-        _CELL_BALANCE_ORACLE,
-    ),
-    "pq_lloyd_refinement": (pq_lloyd_refinement, _LLOYD_ORACLE),
-    "candidate_budget_recall": (
-        candidate_budget_recall,
-        _CBR_ORACLE.replace("{SQL_PLANES}", _sql_planes())
-        .replace("{SQL_CODES}", _SQL_CODES.strip())
-        .replace("{IVF_CTES}", _IVF_CTES)
-        .replace("{KNN_TRUTH}", _REG_ORACLES["knn_bruteforce"]),
-    ),
-    "seed_spread_advisor": (seed_spread_advisor, _SEED_SPREAD_ORACLE),
-    "pq_lloyd_convergence": (pq_lloyd_convergence, _LLOYD_CONV_ORACLE),
-    "ivf_adc_lloyd_recall": (
-        ivf_adc_lloyd_recall,
-        _IVF_ADC_LLOYD_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
-    ),
-}
-
-

@@ -1988,12 +1988,10 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (registry FROZEN in round 9 — VERDICT r8 item 2;
-# ROADMAP "Retrieval / embeddings"). Matryoshka truncation sweep:
-# recall@5 of prefix-dimension retrieval (d = 8/16/32) against the
-# full-64d brute-force truth (knn_bruteforce) — the tuning table for
-# Matryoshka-representation serving (Kusupati et al. 2022,
-# arXiv:2205.13147): how much recall a platform keeps when it ranks
+# Matryoshka truncation sweep: recall@5 of prefix-dimension retrieval (d =
+# 8/16/32) against the full-64d brute-force truth (knn_bruteforce) — the
+# tuning table for Matryoshka-representation serving (Kusupati et al.
+# 2022, arXiv:2205.13147): how much recall a platform keeps when it ranks
 # on a truncated prefix to cut index bytes / dot-product FLOPs.
 #
 # Determinism: prefix dot products and prefix norms reduce to EXACT
@@ -2055,8 +2053,12 @@ _MATRYOSHKA_ORACLE = f"""
     """
 
 
+@operator(
+    "matryoshka_recall_sweep",
+    oracle=_MATRYOSHKA_ORACLE.replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
+)
 def matryoshka_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-dimension recall sweep (see staged block comment). One
+    """Prefix-dimension recall sweep (see block comment). One
     shuffle computes all three prefix dots via conditional sums over
     the pos <= 32 product rows — the per-d work shares a single
     (query, neighbor) aggregation instead of re-scanning per prefix."""
@@ -2157,15 +2159,3 @@ def matryoshka_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("d_prefix")
     )
-
-
-# name -> (fn, oracle); aggregated by operators/staging.py, registered
-# at the round-10 boundary. The truth subquery is spliced from the
-# already-registered knn_bruteforce oracle at aggregation time (the
-# _ORACLES import above is mid-module and complete by now).
-ROUND10_STAGED: dict[str, tuple] = {
-    "matryoshka_recall_sweep": (
-        matryoshka_recall_sweep,
-        _MATRYOSHKA_ORACLE.replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-    ),
-}

@@ -1,8 +1,7 @@
 """Similarity package: coarse-quantizer (cell-side) Lloyd
-diagnostics — the round-13 staged chain (split from codebook.py at its
-round-section boundary; zero behavior change): ivf_cell_lloyd_probe,
-quantization_budget_pareto, ivf_cell_lloyd_convergence and their
-ROUND13_STAGED registration dict."""
+diagnostics (split from codebook.py at a section boundary; zero
+behavior change): ivf_cell_lloyd_probe, quantization_budget_pareto
+and ivf_cell_lloyd_convergence."""
 
 from __future__ import annotations
 
@@ -79,11 +78,6 @@ from bigdataentrytask_spark.operators.similarity.core import (  # noqa: F401,E50
 )
 from bigdataentrytask_spark.operators import ORACLES as _REG_ORACLES  # noqa: E402
 
-
-# ==========================================================================
-# ROUND-13 STAGED (VERDICT r11 item 6; zero registry delta until the
-# round-13 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # Coarse-quantizer (cell-seed) Lloyd refinement (ROADMAP round-13
@@ -196,6 +190,11 @@ _CELL_LLOYD_ORACLE = f"""
     """
 
 
+@operator(
+    "ivf_cell_lloyd_probe",
+    oracle=_CELL_LLOYD_ORACLE.replace("{IVF_CTES}", _IVF_CTES)
+    .replace("{KNN_TRUTH}", _REG_ORACLES["knn_bruteforce"]),
+)
 def ivf_cell_lloyd_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Toy vs one-Lloyd-step coarse quantizer, priced as per-nprobe
     true-neighbor cell coverage (the recall ceiling), candidate
@@ -385,15 +384,6 @@ def ivf_cell_lloyd_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 return materialize(out)
 
 
-ROUND13_STAGED: dict[str, tuple] = {
-    "ivf_cell_lloyd_probe": (
-        ivf_cell_lloyd_probe,
-        _CELL_LLOYD_ORACLE.replace("{IVF_CTES}", _IVF_CTES)
-        .replace("{KNN_TRUTH}", _REG_ORACLES["knn_bruteforce"]),
-    ),
-}
-
-
 # --------------------------------------------------------------------------
 # Budget-normalized quantization pareto (ROADMAP round-13
 # "Retrieval"): quantization_pareto_table prices bytes/vector vs
@@ -504,6 +494,10 @@ _QBP_ORACLE = f"""
     """
 
 
+@operator(
+    "quantization_budget_pareto",
+    oracle=_QBP_ORACLE.replace("{KNN_TRUTH}", _REG_ORACLES["knn_bruteforce"]),
+)
 def quantization_budget_pareto(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -659,12 +653,6 @@ def quantization_budget_pareto(
             return materialize(out)
 
 
-ROUND13_STAGED["quantization_budget_pareto"] = (
-    quantization_budget_pareto,
-    _QBP_ORACLE.replace("{KNN_TRUTH}", _REG_ORACLES["knn_bruteforce"]),
-)
-
-
 # --------------------------------------------------------------------------
 # Coarse-cell Lloyd convergence (round-12 original; completes the
 # Lloyd chain's symmetry — PQ side has pq_lloyd_refinement +
@@ -741,6 +729,7 @@ def _cell_conv_oracle() -> str:
     """
 
 
+@operator("ivf_cell_lloyd_convergence", oracle=_cell_conv_oracle())
 def ivf_cell_lloyd_convergence(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -823,11 +812,3 @@ def ivf_cell_lloyd_convergence(
             .orderBy("step")
         )
         return materialize(out)
-
-
-ROUND13_STAGED["ivf_cell_lloyd_convergence"] = (
-    ivf_cell_lloyd_convergence,
-    _cell_conv_oracle(),
-)
-
-

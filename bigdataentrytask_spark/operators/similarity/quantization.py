@@ -99,17 +99,14 @@ from bigdataentrytask_spark.operators.similarity.diagnostics import (  # noqa: F
     _MATRYOSHKA_DIMS,
     _MATRYOSHKA_ORACLE,
     matryoshka_recall_sweep,
-    ROUND10_STAGED,
 )
 
 
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (ROADMAP "Retrieval / embeddings"): residual (two-
-# level) product quantization. Level 1 = the coarse k-means assignment
-# kmeans_step already verifies (seed convention: first KMEANS_K
-# vectors); level 2 = PQ over the RESIDUAL x - centroid(cell), with
-# the residual codebook drawn from the first _PQ_K vectors' residuals
+# Residual (two-level) product quantization. Level 1 = the coarse k-means
+# assignment kmeans_step already verifies (seed convention: first KMEANS_K
+# vectors); level 2 = PQ over the RESIDUAL x - centroid(cell), with the
+# residual codebook drawn from the first _PQ_K vectors' residuals
 # (the same deterministic seed convention embedding_pq_assign uses on
 # raw vectors). Reports, per subspace, the residual-PQ quantization
 # error against the flat-PQ baseline — the distortion win that
@@ -222,9 +219,10 @@ _RESIDUAL_PQ_ORACLE = f"""
     """
 
 
+@operator("residual_pq_distortion", oracle=_RESIDUAL_PQ_ORACLE)
 def residual_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level (IVF-residual) PQ distortion vs the flat-PQ baseline
-    (see staged block comment). dims and resid are multi-consumer
+    (see block comment). dims and resid are multi-consumer
     fact-scale intermediates -> with_persisted + materialize (the
     sanctioned hygiene pattern; output is 4 domain rows)."""
     from bigdataentrytask_spark.operators import materialize, with_persisted
@@ -352,20 +350,13 @@ def residual_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
 
-ROUND10_STAGED["residual_pq_distortion"] = (
-    residual_pq_distortion,
-    _RESIDUAL_PQ_ORACLE,
-)
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (ROADMAP "Retrieval / embeddings"): HNSW-style
-# layered neighborhood audit — BOUNDED census, not a graph build. Each
-# vector draws a deterministic geometric level (trailing-zero count of
-# an affine hash of vec_id — the arithmetic twin of HNSW's
-# floor(-ln(U)*mL) draw, expected occupancy n/2^l), and for every
-# layer l >= 1 the audit reports what an HNSW build would see there:
-# occupancy, the M-NN edge count, how symmetric the neighborhood is
+# HNSW-style layered neighborhood audit — BOUNDED census, not a graph
+# build. Each vector draws a deterministic geometric level (trailing-zero
+# count of an affine hash of vec_id — the arithmetic twin of HNSW's
+# floor(-ln(U)*mL) draw, expected occupancy n/2^l), and for every layer l
+# >= 1 the audit reports what an HNSW build would see there: occupancy,
+# the M-NN edge count, how symmetric the neighborhood is
 # (mutual edges — HNSW's bidirectional-link heuristic quality), and
 # the mean M-th-neighbor radius (the greedy-search hop scale).
 # Layer 0 is the full corpus: its neighborhood statistics are exactly
@@ -457,8 +448,9 @@ _HNSW_AUDIT_ORACLE = f"""
     """
 
 
+@operator("hnsw_layer_audit", oracle=_HNSW_AUDIT_ORACLE)
 def hnsw_layer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layered M-NN neighborhood census (see staged block comment).
+    """Layered M-NN neighborhood census (see block comment).
     mean_radius = per-node MAX top-M distance, summed exactly
     (decimal path), averaged over nodes, one double division chain —
     identical expression order on both sides."""
@@ -561,13 +553,9 @@ def hnsw_layer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("layer")
 
 
-ROUND10_STAGED["hnsw_layer_audit"] = (hnsw_layer_audit, _HNSW_AUDIT_ORACLE)
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (round-11 candidate pulled forward): binary (sign)
-# quantization recall — 1 bit per dimension, ranking by ascending
-# Hamming distance between sign vectors, evaluated against the
+# Binary (sign) quantization recall — 1 bit per dimension, ranking by
+# ascending Hamming distance between sign vectors, evaluated against the
 # full-precision brute-force truth. Completes the quantization family
 # (flat PQ, residual PQ, b-bit minhash): sign quantization is the
 # cheapest embedding compression a platform can ship (64 dims -> 8
@@ -621,8 +609,12 @@ _BINQ_ORACLE = f"""
     """
 
 
+@operator(
+    "binary_quantization_recall",
+    oracle=_BINQ_ORACLE.replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
+)
 def binary_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-bit Hamming retrieval vs full-precision truth (see staged
+    """Sign-bit Hamming retrieval vs full-precision truth (see
     block comment)."""
     e = _emb(spark, sf_dir)
     bit = (F.round(F.col("x") * 1000000).cast("bigint") >= 0).cast("int")
@@ -672,22 +664,14 @@ def binary_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND10_STAGED["binary_quantization_recall"] = (
-    binary_quantization_recall,
-    _BINQ_ORACLE.replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-)
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (round-11 candidate pulled forward): graph-expansion
-# recall ceiling. Graph-augmented ANN (HNSW/DiskANN's core move) grows
-# the candidate set by walking kNN-graph edges from the hash-bucket
-# seeds; this audit measures exactly what ONE hop buys on this corpus:
-# stage a = the raw LSH bucket-mates (knn_lsh's candidate set), stage
-# b = those plus each candidate's top-M exact neighbors. Per stage:
-# mean candidate volume and recall@5 against the brute-force truth —
-# the volume/recall trade a platform reads before turning on graph
-# expansion.
+# Graph-expansion recall ceiling. Graph-augmented ANN (HNSW/DiskANN's core
+# move) grows the candidate set by walking kNN-graph edges from the
+# hash-bucket seeds; this audit measures exactly what ONE hop buys on this
+# corpus: stage a = the raw LSH bucket-mates (knn_lsh's candidate set),
+# stage b = those plus each candidate's top-M exact neighbors. Per stage:
+# mean candidate volume and recall@5 against the brute-force truth — the
+# volume/recall trade a platform reads before turning on graph expansion.
 #
 # Determinism: candidate sets from the shared LSH codes (sign buckets,
 # bit-identical across engines per functions/vector.py); the kNN
@@ -794,8 +778,14 @@ _GRAPH_EXPANSION_ORACLE = f"""
     """
 
 
+@operator(
+    "graph_expansion_recall",
+    oracle=_GRAPH_EXPANSION_ORACLE.replace("{SQL_PLANES}", _sql_planes())
+    .replace("{SQL_CODES}", _SQL_CODES)
+    .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
+)
 def graph_expansion_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidates vs 1-hop kNN-graph expansion (see staged block
+    """LSH candidates vs 1-hop kNN-graph expansion (see block
     comment). The dims frame feeds the graph build, the norms, and
     both dot sides -> with_persisted + materialize."""
     from bigdataentrytask_spark.operators import materialize, with_persisted
@@ -937,19 +927,6 @@ def graph_expansion_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
-ROUND10_STAGED["graph_expansion_recall"] = (
-    graph_expansion_recall,
-    _GRAPH_EXPANSION_ORACLE.replace("{SQL_PLANES}", _sql_planes())
-    .replace("{SQL_CODES}", _SQL_CODES)
-    .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-)
-
-
-# ==========================================================================
-# ROUND-11 STAGED (VERDICT r9 item 6; zero registry delta until the
-# round-11 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
-
 # --------------------------------------------------------------------------
 # Asymmetric binary retrieval (ROADMAP round-11 "Retrieval"): the
 # production asymmetric-hashing trade — the CORPUS is compressed to
@@ -1027,11 +1004,15 @@ _ASYM_BINQ_ORACLE = f"""
     """
 
 
+@operator(
+    "asymmetric_binary_retrieval",
+    oracle=_ASYM_BINQ_ORACLE.replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
+)
 def asymmetric_binary_retrieval(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Full-precision query vs sign-bit corpus, side-by-side with the
-    symmetric Hamming ranking (see staged block comment). One
+    symmetric Hamming ranking (see block comment). One
     (query, neighbor) aggregation computes BOTH scores; the two
     rankings share it."""
     from bigdataentrytask_spark.operators import materialize, with_persisted
@@ -1229,6 +1210,12 @@ _TWO_HOP_ORACLE = f"""
     """
 
 
+@operator(
+    "two_hop_expansion_ceiling",
+    oracle=_TWO_HOP_ORACLE.replace("{SQL_PLANES}", _sql_planes())
+    .replace("{SQL_CODES}", _SQL_CODES)
+    .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
+)
 def two_hop_expansion_ceiling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH -> +1-hop -> +2-hop candidate volume / recall curve (see
     staged block comment). The dims frame feeds the graph build, the
@@ -1405,20 +1392,6 @@ def two_hop_expansion_ceiling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
-ROUND11_STAGED: dict[str, tuple] = {
-    "asymmetric_binary_retrieval": (
-        asymmetric_binary_retrieval,
-        _ASYM_BINQ_ORACLE.replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-    ),
-    "two_hop_expansion_ceiling": (
-        two_hop_expansion_ceiling,
-        _TWO_HOP_ORACLE.replace("{SQL_PLANES}", _sql_planes())
-        .replace("{SQL_CODES}", _SQL_CODES)
-        .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-    ),
-}
-
-
 # --------------------------------------------------------------------------
 # Quantization pareto table (ROADMAP round-12, pulled forward): the
 # serving-config decision table — bytes per vector vs recall@5 —
@@ -1457,6 +1430,7 @@ def _pareto_oracle() -> str:
     """
 
 
+@operator("quantization_pareto_table", oracle=_pareto_oracle())
 def quantization_pareto_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bytes/vector vs recall@5 across the verified quantization
     family (see block comment)."""
@@ -1486,12 +1460,6 @@ def quantization_pareto_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         anchor.unionByName(m).unionByName(asym).unionByName(sym)
         .orderBy("config")
     )
-
-
-ROUND11_STAGED["quantization_pareto_table"] = (
-    quantization_pareto_table,
-    _pareto_oracle(),
-)
 
 
 # --------------------------------------------------------------------------
@@ -1585,6 +1553,12 @@ _PROBE_SCHEDULE_ORACLE = f"""
     """
 
 
+@operator(
+    "multiprobe_schedule_advisor",
+    oracle=_PROBE_SCHEDULE_ORACLE.replace("{SQL_PLANES}", _sql_planes())
+    .replace("{SQL_CODES}", _SQL_CODES)
+    .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
+)
 def multiprobe_schedule_advisor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1725,14 +1699,6 @@ def multiprobe_schedule_advisor(
         )
 
 
-ROUND11_STAGED["multiprobe_schedule_advisor"] = (
-    multiprobe_schedule_advisor,
-    _PROBE_SCHEDULE_ORACLE.replace("{SQL_PLANES}", _sql_planes())
-    .replace("{SQL_CODES}", _SQL_CODES)
-    .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-)
-
-
 # --------------------------------------------------------------------------
 # PQ asymmetric-distance recall (ROADMAP round-12, pulled forward;
 # completes the quantization family): corpus vectors compress to
@@ -1824,6 +1790,7 @@ _PQ_ADC_ORACLE = f"""
     """
 
 
+@operator("pq_adc_recall", oracle=_PQ_ADC_ORACLE)
 def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ table-lookup (ADC) retrieval vs exact-L2 truth (see block
     comment). The dims frame feeds the assignment, the query side,
@@ -1946,9 +1913,6 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("recall_at_5"),
             )
         )
-
-
-ROUND11_STAGED["pq_adc_recall"] = (pq_adc_recall, _PQ_ADC_ORACLE)
 
 
 # --------------------------------------------------------------------------
@@ -2080,6 +2044,10 @@ _IVF_ADC_ORACLE = f"""
     """
 
 
+@operator(
+    "ivf_adc_recall",
+    oracle=_IVF_ADC_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
+)
 def ivf_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC: coarse cell probe + PQ table-lookup ranking (see block
     comment — one superset ADC pass, nested nprobe levels in one
@@ -2291,10 +2259,3 @@ def ivf_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("nprobe")
         )
-
-
-ROUND11_STAGED["ivf_adc_recall"] = (
-    ivf_adc_recall,
-    _IVF_ADC_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
-)
-

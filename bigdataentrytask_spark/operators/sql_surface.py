@@ -1667,9 +1667,7 @@ def weighted_median_unit_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round-7 surface probes (registered deferred — __spark_entry__._DEFER —
-# so they consume no round-6 sweep slots; the round-7 sweep picks them
-# up as never-checked).
+# Round-7 surface probes.
 # --------------------------------------------------------------------------
 @operator(
     "hash_functions_probe",

@@ -1647,13 +1647,12 @@ def dedup_then_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (round-11 candidate pulled forward): boilerplate
-# chunk census. Crawled corpora carry repeated headers/footers; the
-# standard detector is "does a document's LEADING (or TRAILING)
-# fixed-size chunk hash-match another document of the same source?".
-# Per source: doc count, shared-head share, shared-tail share (ppm) —
-# the table that decides whether a source needs boilerplate stripping
-# before dedup (a shared header inflates every Jaccard score).
+# Boilerplate chunk census. Crawled corpora carry repeated
+# headers/footers; the standard detector is "does a document's LEADING (or
+# TRAILING) fixed-size chunk hash-match another document of the same
+# source?". Per source: doc count, shared-head share, shared-tail share
+# (ppm) — the table that decides whether a source needs boilerplate
+# stripping before dedup (a shared header inflates every Jaccard score).
 #
 # Scale: two (source, chunk) aggregations over one chunk per doc each
 # — map-side partial, source-sized output; no pair enumeration.
@@ -1700,9 +1699,9 @@ _BOILERPLATE_ORACLE = f"""
     """
 
 
+@operator("boilerplate_chunk_census", oracle=_BOILERPLATE_ORACLE)
 def boilerplate_chunk_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared leading/trailing chunk share per source (see staged
-    block comment)."""
+    """Shared leading/trailing chunk share per source (see block comment)."""
     w = _docs(spark, sf_dir).select(
         "doc_id", "source", F.split("text", " ").alias("ws")
     )
@@ -1747,5 +1746,3 @@ def boilerplate_chunk_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("tail_share_ppm"),
     ).orderBy("source")
-
-

@@ -1,9 +1,9 @@
 """Text-analysis package, segment 3 of 3 (former
 text_analysis.py lines 3363-4605, split mechanically at section
-boundaries; zero behavior change): the ROUND10..ROUND14 staged-slate
-operators and their registration dicts (boilerplate census, length
-truncation, perplexity gates, pack/padding sweeps, quality-prune mix
-shift, post-gate mix rebalance)."""
+boundaries; zero behavior change): corpus-curation audits and
+planners (length truncation, intra-document repetition, domain mix,
+perplexity gates, pack/padding sweeps, quality-prune mix shift,
+post-gate mix rebalance)."""
 
 from __future__ import annotations
 
@@ -28,23 +28,11 @@ from bigdataentrytask_spark.operators.text_analysis.core import (  # noqa: E402
     _BPEISH_RE,
     _docs,
 )
-from bigdataentrytask_spark.operators.text_analysis.fingerprints import (  # noqa: E402
-    _BOILERPLATE_ORACLE,
-    boilerplate_chunk_census,
-)
-
-ROUND10_STAGED: dict[str, tuple] = {
-    "boilerplate_chunk_census": (
-        boilerplate_chunk_census,
-        _BOILERPLATE_ORACLE,
-    ),
-}
 
 
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (round-11 candidate pulled forward): length-outlier
-# truncation audit. Two ingest-defect signals per source: (1) the
-# share of documents at EXACTLY the per-source maximum length — a
+# Length-outlier truncation audit. Two ingest-defect signals per source:
+# (1) the share of documents at EXACTLY the per-source maximum length — a
 # spike there is the "truncated at ingest" fingerprint (a natural
 # length distribution has a thin max); (2) the count above a robust
 # median + 3*MAD fence. Median and MAD are DISCRETE rank picks
@@ -104,6 +92,7 @@ _TRUNC_ORACLE = """
     """
 
 
+@operator("length_truncation_audit", oracle=_TRUNC_ORACLE)
 def length_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source truncation-spike + robust-fence outlier census (see
     staged block comment)."""
@@ -169,17 +158,6 @@ def length_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND10_STAGED["length_truncation_audit"] = (
-    length_truncation_audit,
-    _TRUNC_ORACLE,
-)
-
-
-# ==========================================================================
-# ROUND-11 STAGED (VERDICT r9 item 6; zero registry delta until the
-# round-11 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
-
 # --------------------------------------------------------------------------
 # Intra-document repetition audit (Gopher rule family, Rae et al.
 # 2021 §A1.1): per SOURCE, how much of each document is repeated
@@ -228,6 +206,7 @@ _INTRA_REP_ORACLE = f"""
     """
 
 
+@operator("intra_doc_repetition_audit", oracle=_INTRA_REP_ORACLE)
 def intra_doc_repetition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source repeated word-3-gram census (see block comment)."""
     docs = _docs(spark, sf_dir)
@@ -304,6 +283,7 @@ _DOMAIN_MIX_ORACLE = f"""
     """
 
 
+@operator("domain_mix_planner", oracle=_DOMAIN_MIX_ORACLE)
 def domain_mix_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token share + uniform-rebalance sampling weight (see
     block comment)."""
@@ -337,20 +317,6 @@ def domain_mix_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("source")
     )
 
-
-ROUND11_STAGED: dict[str, tuple] = {
-    "intra_doc_repetition_audit": (
-        intra_doc_repetition_audit,
-        _INTRA_REP_ORACLE,
-    ),
-    "domain_mix_planner": (domain_mix_planner, _DOMAIN_MIX_ORACLE),
-}
-
-
-# ==========================================================================
-# ROUND-12 STAGED (VERDICT r10 item 7; zero registry delta until the
-# round-12 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # Perplexity pruning gate (ROADMAP round-12 "Curation"): the
@@ -401,6 +367,7 @@ _PPG_ORACLE = f"""
     """
 
 
+@operator("perplexity_pruning_gate", oracle=_PPG_ORACLE)
 def perplexity_pruning_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source 10%-percentile LM-score pruning gate (see block
     comment): exact discrete thresholds as audit content, plus the
@@ -539,6 +506,7 @@ _PACK_SWEEP_ORACLE = f"""
     """
 
 
+@operator("pack_length_sweep", oracle=_PACK_SWEEP_ORACLE)
 def pack_length_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fill vs doc-straddling per candidate context length under the
     sequence_pack continuous-flow rule (see block comment)."""
@@ -614,17 +582,6 @@ def pack_length_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND12_STAGED: dict[str, tuple] = {
-    "perplexity_pruning_gate": (perplexity_pruning_gate, _PPG_ORACLE),
-    "pack_length_sweep": (pack_length_sweep, _PACK_SWEEP_ORACLE),
-}
-
-
-# ==========================================================================
-# ROUND-13 STAGED (VERDICT r11 item 6; zero registry delta until the
-# round-13 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
-
 # --------------------------------------------------------------------------
 # Language x source perplexity gate (ROADMAP round-13 "Curation"):
 # the CCNet regime proper. perplexity_pruning_gate prunes the worst
@@ -675,6 +632,7 @@ _PPGL_ORACLE = f"""
     """
 
 
+@operator("perplexity_gate_by_lang", oracle=_PPGL_ORACLE)
 def perplexity_gate_by_lang(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -872,6 +830,7 @@ def _pad_pack_kernel(lens: list[int]):
     return kernel
 
 
+@operator("pack_padding_sweep", oracle=_PAD_SWEEP_ORACLE)
 def pack_padding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """No-straddle (padding-mode) packing per candidate context
     length: sequences, exact pad waste, fill, oversize docs (see
@@ -999,6 +958,7 @@ _QPMS_ORACLE = f"""
     """
 
 
+@operator("quality_prune_mix_shift", oracle=_QPMS_ORACLE)
 def quality_prune_mix_shift(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1081,21 +1041,6 @@ def quality_prune_mix_shift(
         .orderBy("source")
     )
 
-
-ROUND13_STAGED: dict[str, tuple] = {
-    "perplexity_gate_by_lang": (perplexity_gate_by_lang, _PPGL_ORACLE),
-    "pack_padding_sweep": (pack_padding_sweep, _PAD_SWEEP_ORACLE),
-    "quality_prune_mix_shift": (
-        quality_prune_mix_shift,
-        _QPMS_ORACLE,
-    ),
-}
-
-
-# ==========================================================================
-# ROUND-14 STAGED (ROADMAP §"Round 14+"; zero registry delta until the
-# round-14 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # Post-gate mixture re-balancer (ROADMAP round-14 "Curation"):
@@ -1185,6 +1130,7 @@ _PGM_ORACLE = f"""
     """
 
 
+@operator("post_gate_mix_rebalance", oracle=_PGM_ORACLE)
 def post_gate_mix_rebalance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1271,8 +1217,3 @@ def post_gate_mix_rebalance(
         )
         .orderBy("source")
     )
-
-
-ROUND14_STAGED: dict[str, tuple] = {
-    "post_gate_mix_rebalance": (post_gate_mix_rebalance, _PGM_ORACLE),
-}

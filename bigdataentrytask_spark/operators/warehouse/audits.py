@@ -1740,13 +1740,11 @@ def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (registry FROZEN in round 9 — VERDICT r8 item 2;
-# ROADMAP "Warehouse / engine hygiene"). Sort-order advisor: per-column
-# run statistics under the CURRENT logical order vs a CANDIDATE sort,
-# generalizing zone_map_skipping — long runs of equal values are what
-# make min/max zone maps, RLE encoding, and data skipping effective,
-# so comparing run counts across candidate sort orders is the planning
-# table behind a re-cluster / z-order decision.
+# Sort-order advisor: per-column run statistics under the CURRENT logical
+# order vs a CANDIDATE sort, generalizing zone_map_skipping — long runs of
+# equal values are what make min/max zone maps, RLE encoding, and data
+# skipping effective, so comparing run counts across candidate sort orders
+# is the planning table behind a re-cluster / z-order decision.
 #
 # Determinism: "physical order" is layout-sensitive, so both orderings
 # are DEFINED on logical keys — current starts at (l_orderkey,
@@ -1805,9 +1803,10 @@ _SORT_ADVISOR_ORACLE = """
     """
 
 
+@operator("sort_order_advisor", oracle=_SORT_ADVISOR_ORACLE)
 def sort_order_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run-length statistics per column under two defined sort orders
-    (see staged block comment for semantics + 100 TB contract).
+    (see block comment for semantics + 100 TB contract).
 
     Deliberately NOT persisted although both windows consume the
     stacked frame: caching the 1.8M-row stacked intermediate measured
@@ -1870,5 +1869,3 @@ def sort_order_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(runs(w_shp, "shipdate"))
         .orderBy("ordering", "col_name")
     )
-
-

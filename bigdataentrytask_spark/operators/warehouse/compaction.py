@@ -1,9 +1,8 @@
 """Warehouse package, segment 4 of 4 (former warehouse.py lines
 5079-6125, split mechanically at section boundaries — zero behavior
-change): the round-13/14 compaction-economics chain — workload-
-weighted sort advisor, compaction write amplification, the schedule
-amortizer, the read bill, and the policy Pareto table — with their
-ROUND13/14_STAGED registration dicts."""
+change): the compaction-economics chain — workload-weighted sort
+advisor, compaction write amplification, the schedule amortizer, the
+read bill, and the policy Pareto table."""
 
 from __future__ import annotations
 
@@ -11,12 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdataentrytask_spark.catalog import load_table
-from bigdataentrytask_spark.operators import (
-    local_frame,
-    materialize,
-    operator,
-    with_persisted,
-)
+from bigdataentrytask_spark.operators import local_frame, operator
 from bigdataentrytask_spark.session import ensure_session_confs
 
 from bigdataentrytask_spark.operators.warehouse.core import (  # noqa: E402
@@ -31,10 +25,6 @@ from bigdataentrytask_spark.operators.warehouse.layout import (  # noqa: E402
     _skb_overlap_sql,
 )
 
-# ==========================================================================
-# ROUND-13 STAGED (VERDICT r11 item 6; zero registry delta until the
-# round-13 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # Workload-weighted sort advisor (ROADMAP round-13 "Warehouse"):
@@ -119,6 +109,7 @@ _WSA_ORACLE = f"""
     """
 
 
+@operator("workload_weighted_sort_advisor", oracle=_WSA_ORACLE)
 def workload_weighted_sort_advisor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -309,6 +300,7 @@ _CWA_ORACLE = f"""
     """
 
 
+@operator("compaction_write_amp", oracle=_CWA_ORACLE)
 def compaction_write_amp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows rewritten (write amplification) per candidate compaction
     floor, with the workload-mean read amplification alongside (see
@@ -410,20 +402,6 @@ def compaction_write_amp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("floor_rows")
     )
 
-
-ROUND13_STAGED: dict[str, tuple] = {
-    "workload_weighted_sort_advisor": (
-        workload_weighted_sort_advisor,
-        _WSA_ORACLE,
-    ),
-    "compaction_write_amp": (compaction_write_amp, _CWA_ORACLE),
-}
-
-
-# ==========================================================================
-# ROUND-14 STAGED (ROADMAP §"Round 14+"; zero registry delta until the
-# round-14 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # Compaction schedule amortizer (ROADMAP round-14 "Warehouse"):
@@ -536,6 +514,7 @@ _CSA_ORACLE = f"""
     """
 
 
+@operator("compaction_schedule_amortizer", oracle=_CSA_ORACLE)
 def compaction_schedule_amortizer(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -646,14 +625,6 @@ def compaction_schedule_amortizer(
         .alias("mean_live_files_e3"),
         "max_live_files",
     ).orderBy("floor_rows", "policy")
-
-
-ROUND14_STAGED: dict[str, tuple] = {
-    "compaction_schedule_amortizer": (
-        compaction_schedule_amortizer,
-        _CSA_ORACLE,
-    ),
-}
 
 
 # --------------------------------------------------------------------------
@@ -791,6 +762,7 @@ _CRB_ORACLE = f"""
     """
 
 
+@operator("compaction_read_bill", oracle=_CRB_ORACLE)
 def compaction_read_bill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream read amplification per (compaction floor, schedule
     policy): the workload re-run against every interim layout the
@@ -959,12 +931,6 @@ def compaction_read_bill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("floor_rows", "policy")
 
 
-ROUND14_STAGED["compaction_read_bill"] = (
-    compaction_read_bill,
-    _CRB_ORACLE,
-)
-
-
 # --------------------------------------------------------------------------
 # Compaction policy pareto face (round-15 queue item, pulled
 # forward): the amortizer prices (write amp, live files) and the
@@ -1019,6 +985,7 @@ _CPP_ORACLE = f"""
     """
 
 
+@operator("compaction_policy_pareto", oracle=_CPP_ORACLE)
 def compaction_policy_pareto(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1072,610 +1039,3 @@ def compaction_policy_pareto(
         "n_dominators",
         (F.col("n_dominators") > 0).alias("dominated"),
     ).orderBy("floor_rows", "policy")
-
-
-ROUND14_STAGED["compaction_policy_pareto"] = (
-    compaction_policy_pareto,
-    _CPP_ORACLE,
-)
-
-
-# ==========================================================================
-# ROUND-15 STAGED (ROADMAP §"Round 15+"; zero registry delta until the
-# round-15 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
-
-# --------------------------------------------------------------------------
-# Compaction face-transfer audit (ROADMAP round-15 "Warehouse"):
-# compaction_policy_pareto pinned that the 3-axis face INVERTS
-# between sf0.001 and sf0.01 — but a compaction owner cannot re-run
-# the corpus at another scale to see where their verdict breaks.
-# This table synthesizes the scale axis: per-month arrival counts
-# are multiplied by an exact rational (1/4, 1, 4, 16 — integer
-# floor-div, so every downstream number stays an exact integer) and
-# the FULL 3-axis pipeline (schedule amortizer write amp + live
-# files, read-bill read amp, CZP workload) re-runs per scale, with
-# pareto dominance flagged WITHIN each scale across its 9
-# (floor, policy) rows — the same candidate-set convention as
-# compaction_policy_pareto. The crossover reads directly: the
-# smallest scale at which every at_end row is dominated is the
-# month-size floor above which the at_end verdict stops
-# transferring.
-# Synthetic-corpus convention (documented, both engines identical):
-# scaled month counts AND scaled per-(month, predicate) matched
-# counts use the same (n * num) // den floor rule — a month whose
-# scaled count is 0 is still a part (it occupies a file slot but
-# scans 0 rows), which is exactly how an empty-partition landing
-# behaves.
-# Convention repair vs the parents: the amortizer counts eager live
-# files as gid + 1, which is exact while months are smaller than
-# the floor but counts PHANTOM empty groups once a scaled month
-# spans multiple floor widths (gid jumps — e.g. c_x4 at floor 200
-# has max gid 299 over only 80 real groups). This op counts
-# DISTINCT groups (dense rank), which is identical wherever no jump
-# occurs — so every b_base row still equals
-# compaction_policy_pareto EXACTLY (asserted in the staged test) —
-# and stays honest at the out-of-regime scales the parents never
-# see.
-# Exact math: all integer sums; the two roundings per row
-# (write-amp ppm, live-files e3) plus the read-amp ppm are the only
-# doubles — the parents' conventions unchanged.
-# Scale: the parents' month-domain joins gain one 4-row scale
-# dimension (T^2/2 x |preds| x |floors| x |scales| ~ 160k rows at
-# any data scale); the fact table is touched once for the month
-# rollup and once for the per-(month, pred) matched counts.
-# --------------------------------------------------------------------------
-_CFT_SCALES = [("a_div4", 1, 4), ("b_base", 1, 1),
-               ("c_x4", 4, 1), ("d_x16", 16, 1)]
-
-_CFT_ORACLE = f"""
-    WITH per0 AS (
-      SELECT date_trunc('month', o_orderdate) AS m,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM orders GROUP BY 1
-    ),
-    sc(scale, num, den) AS (VALUES
-      {", ".join(f"('{s}', {a}, {b})" for s, a, b in _CFT_SCALES)}),
-    pers AS (
-      SELECT sc.scale, p.m,
-             CAST((p.n * sc.num) // sc.den AS BIGINT) AS n
-      FROM per0 p CROSS JOIN sc
-    ),
-    cum AS (
-      SELECT scale, m, n,
-             COALESCE(SUM(n) OVER (PARTITION BY scale ORDER BY m
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS before,
-             ROW_NUMBER() OVER (PARTITION BY scale ORDER BY m) AS t
-      FROM pers
-    ),
-    fl(floor_rows) AS (VALUES
-      {", ".join(f"({x})" for x in _CFS_FLOORS)}),
-    sched AS (
-      SELECT c.scale, fl.floor_rows, c.t, c.m, c.n,
-             CAST(FLOOR(c.before / fl.floor_rows) AS BIGINT) AS gid,
-             ROW_NUMBER() OVER (
-               PARTITION BY c.scale, fl.floor_rows,
-                            FLOOR(c.before / fl.floor_rows)
-               ORDER BY c.m) AS pidx,
-             SUM(c.n) OVER (
-               PARTITION BY c.scale, fl.floor_rows,
-                            FLOOR(c.before / fl.floor_rows)
-               ORDER BY c.m ROWS UNBOUNDED PRECEDING) AS pfx,
-             DENSE_RANK() OVER (
-               PARTITION BY c.scale, fl.floor_rows
-               ORDER BY FLOOR(c.before / fl.floor_rows)) AS grp_idx
-      FROM cum c CROSS JOIN fl
-    ),
-    base AS (
-      SELECT scale, floor_rows,
-             CAST(MAX(t) AS BIGINT) AS n_months,
-             CAST(SUM(n) AS BIGINT) AS rows_ingested,
-             CAST(SUM(CASE WHEN pidx >= 2 THEN pfx ELSE 0 END)
-                  AS BIGINT) AS eager_rw,
-             CAST(SUM(grp_idx) AS BIGINT) AS ls_eager,
-             CAST(SUM(grp_idx - 1 + pidx) AS BIGINT) AS ls_close,
-             CAST(SUM(t) AS BIGINT) AS ls_end
-      FROM sched GROUP BY 1, 2
-    ),
-    closed AS (
-      SELECT scale, floor_rows,
-             CAST(SUM(CASE WHEN n_parts >= 2 THEN n_rows ELSE 0 END)
-                  AS BIGINT) AS close_rw
-      FROM (
-        SELECT scale, floor_rows, gid, SUM(n) AS n_rows,
-               COUNT(*) AS n_parts
-        FROM sched GROUP BY 1, 2, 3
-      ) GROUP BY 1, 2
-    ),
-    amort AS (
-      SELECT b.scale, b.floor_rows, 'eager' AS policy,
-             b.eager_rw AS rw, b.rows_ingested, b.n_months,
-             b.ls_eager AS live_sum
-      FROM base b
-      UNION ALL
-      SELECT b.scale, b.floor_rows, 'on_close', c.close_rw,
-             b.rows_ingested, b.n_months, b.ls_close
-      FROM base b JOIN closed c ON c.scale = b.scale
-                              AND c.floor_rows = b.floor_rows
-      UNION ALL
-      SELECT b.scale, b.floor_rows, 'at_end', c.close_rw,
-             b.rows_ingested, b.n_months, b.ls_end
-      FROM base b JOIN closed c ON c.scale = b.scale
-                              AND c.floor_rows = b.floor_rows
-    ),
-    grp AS (
-      SELECT scale, floor_rows, gid, MIN(m) AS g_lo,
-             MAX(m) + INTERVAL 1 MONTH AS g_hi,
-             CAST(SUM(n) AS BIGINT) AS n_rows
-      FROM sched GROUP BY 1, 2, 3
-    ),
-    preds(pred_id, lo, hi) AS (VALUES
-      {{CFT_PREDS}}
-    ),
-    mm AS (
-      SELECT sc.scale, p.pred_id, mm0.m,
-             CAST((mm0.rows_in * sc.num) // sc.den AS BIGINT)
-               AS rows_in
-      FROM (
-        SELECT p0.pred_id, date_trunc('month', o.o_orderdate) AS m,
-               CAST(COUNT(*) AS BIGINT) AS rows_in
-        FROM orders o JOIN preds p0
-          ON o.o_orderdate >= p0.lo AND o.o_orderdate < p0.hi
-        GROUP BY 1, 2
-      ) mm0
-      JOIN preds p ON p.pred_id = mm0.pred_id
-      CROSS JOIN sc
-    ),
-    loose_end AS (
-      SELECT o.scale, o.floor_rows, CAST(SUM(p.n) AS BIGINT) AS sc
-      FROM sched o
-      JOIN sched p ON p.scale = o.scale
-                  AND p.floor_rows = o.floor_rows AND p.t <= o.t
-      JOIN preds pr ON pr.lo < p.m + INTERVAL 1 MONTH AND pr.hi > p.m
-      GROUP BY 1, 2
-    ),
-    loose_open AS (
-      SELECT o.scale, o.floor_rows, CAST(SUM(p.n) AS BIGINT) AS sc
-      FROM sched o
-      JOIN sched p ON p.scale = o.scale
-                  AND p.floor_rows = o.floor_rows AND p.t <= o.t
-                  AND p.gid = o.gid
-      JOIN preds pr ON pr.lo < p.m + INTERVAL 1 MONTH AND pr.hi > p.m
-      GROUP BY 1, 2
-    ),
-    merged AS (
-      SELECT o.scale, o.floor_rows, CAST(SUM(g.n_rows) AS BIGINT) AS sc
-      FROM sched o
-      JOIN grp g ON g.scale = o.scale
-                AND g.floor_rows = o.floor_rows AND g.gid < o.gid
-      JOIN preds pr ON pr.lo < g.g_hi AND pr.hi > g.g_lo
-      GROUP BY 1, 2
-    ),
-    eopen AS (
-      SELECT o.scale, o.floor_rows, CAST(SUM(o.pfx) AS BIGINT) AS sc
-      FROM sched o
-      JOIN grp g ON g.scale = o.scale
-                AND g.floor_rows = o.floor_rows AND g.gid = o.gid
-      JOIN preds pr ON pr.lo < o.m + INTERVAL 1 MONTH
-                   AND pr.hi > g.g_lo
-      GROUP BY 1, 2
-    ),
-    matched AS (
-      SELECT o.scale, o.floor_rows, CAST(SUM(mm.rows_in) AS BIGINT) AS mt
-      FROM sched o
-      JOIN sched p ON p.scale = o.scale
-                  AND p.floor_rows = o.floor_rows AND p.t <= o.t
-      JOIN mm ON mm.scale = o.scale AND mm.m = p.m
-      GROUP BY 1, 2
-    ),
-    rb AS (
-      SELECT m.scale, m.floor_rows, 'at_end' AS policy,
-             COALESCE(le.sc, 0) AS scanned, m.mt
-      FROM matched m
-      LEFT JOIN loose_end le ON le.scale = m.scale
-                            AND le.floor_rows = m.floor_rows
-      UNION ALL
-      SELECT m.scale, m.floor_rows, 'on_close',
-             COALESCE(mg.sc, 0) + COALESCE(lo.sc, 0), m.mt
-      FROM matched m
-      LEFT JOIN merged mg ON mg.scale = m.scale
-                         AND mg.floor_rows = m.floor_rows
-      LEFT JOIN loose_open lo ON lo.scale = m.scale
-                             AND lo.floor_rows = m.floor_rows
-      UNION ALL
-      SELECT m.scale, m.floor_rows, 'eager',
-             COALESCE(mg.sc, 0) + COALESCE(eo.sc, 0), m.mt
-      FROM matched m
-      LEFT JOIN merged mg ON mg.scale = m.scale
-                         AND mg.floor_rows = m.floor_rows
-      LEFT JOIN eopen eo ON eo.scale = m.scale
-                        AND eo.floor_rows = m.floor_rows
-    ),
-    mx AS (
-      SELECT a.scale, a.floor_rows, a.policy,
-             CAST(ROUND(a.rw * 1000000.0 / a.rows_ingested) AS BIGINT)
-               AS write_amp_ppm,
-             CAST(ROUND(a.live_sum * 1000.0 / a.n_months) AS BIGINT)
-               AS mean_live_files_e3,
-             CAST(ROUND(r.scanned * 1000000.0 / r.mt) AS BIGINT)
-               AS read_amp_ppm
-      FROM amort a
-      JOIN rb r ON r.scale = a.scale
-               AND r.floor_rows = a.floor_rows AND r.policy = a.policy
-    )
-    SELECT mx.scale, CAST(mx.floor_rows AS BIGINT) AS floor_rows,
-           mx.policy, mx.write_amp_ppm, mx.mean_live_files_e3,
-           mx.read_amp_ppm,
-           CAST((SELECT COUNT(*) FROM mx o
-                 WHERE o.scale = mx.scale
-                   AND o.write_amp_ppm <= mx.write_amp_ppm
-                   AND o.mean_live_files_e3 <= mx.mean_live_files_e3
-                   AND o.read_amp_ppm <= mx.read_amp_ppm
-                   AND (o.write_amp_ppm < mx.write_amp_ppm
-                        OR o.mean_live_files_e3 < mx.mean_live_files_e3
-                        OR o.read_amp_ppm < mx.read_amp_ppm))
-                AS BIGINT) AS n_dominators,
-           (SELECT COUNT(*) FROM mx o
-            WHERE o.scale = mx.scale
-              AND o.write_amp_ppm <= mx.write_amp_ppm
-              AND o.mean_live_files_e3 <= mx.mean_live_files_e3
-              AND o.read_amp_ppm <= mx.read_amp_ppm
-              AND (o.write_amp_ppm < mx.write_amp_ppm
-                   OR o.mean_live_files_e3 < mx.mean_live_files_e3
-                   OR o.read_amp_ppm < mx.read_amp_ppm)) > 0
-             AS dominated
-    FROM mx
-    ORDER BY mx.scale, mx.floor_rows, mx.policy
-    """
-
-
-def compaction_face_transfer(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The 3-axis compaction pareto re-run at four synthetic
-    month-size scales, dominance flagged within each scale — where
-    the at_end verdict stops transferring (see block comment)."""
-    o = _t(spark, sf_dir, "orders").select("o_orderdate")
-    per0 = o.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("m")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    sc = local_frame(
-        spark, _CFT_SCALES, "scale string, num long, den long"
-    )
-    pers = per0.crossJoin(F.broadcast(sc)).select(
-        "scale",
-        "num",
-        "den",
-        "m",
-        F.floor(F.col("n") * F.col("num") / F.col("den"))
-        .cast("bigint")
-        .alias("n"),
-    )
-    wb = (
-        Window.partitionBy("scale")
-        .orderBy("m")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = pers.select(
-        "scale",
-        "m",
-        "n",
-        F.coalesce(F.sum("n").over(wb), F.lit(0)).alias("before"),
-        F.row_number()
-        .over(Window.partitionBy("scale").orderBy("m"))
-        .alias("t"),
-    )
-    fl = local_frame(
-        spark, [(x,) for x in _CFS_FLOORS], "floor_rows long"
-    )
-    wg = Window.partitionBy("scale", "floor_rows", "gid").orderBy("m")
-    sched = (
-        cum.crossJoin(F.broadcast(fl))
-        .withColumn(
-            "gid", F.floor(F.col("before") / F.col("floor_rows"))
-        )
-        .withColumn("pidx", F.row_number().over(wg))
-        .withColumn(
-            "pfx",
-            F.sum("n").over(
-                wg.rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow
-                )
-            ),
-        )
-        .withColumn(
-            "grp_idx",
-            F.dense_rank().over(
-                Window.partitionBy("scale", "floor_rows").orderBy("gid")
-            ),
-        )
-        .select(
-            "scale", "floor_rows", "t", "m", "n", "gid", "pidx",
-            "pfx", "grp_idx",
-        )
-    )
-    with with_persisted(sched) as sched_p:
-        base = sched_p.groupBy("scale", "floor_rows").agg(
-            F.max("t").cast("bigint").alias("n_months"),
-            F.sum("n").cast("bigint").alias("rows_ingested"),
-            F.sum(
-                F.when(F.col("pidx") >= 2, F.col("pfx")).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("eager_rw"),
-            F.sum("grp_idx").cast("bigint").alias("ls_eager"),
-            F.sum(F.col("grp_idx") - 1 + F.col("pidx"))
-            .cast("bigint")
-            .alias("ls_close"),
-            F.sum("t").cast("bigint").alias("ls_end"),
-        )
-        closed = (
-            sched_p.groupBy("scale", "floor_rows", "gid")
-            .agg(
-                F.sum("n").alias("n_rows"),
-                F.count(F.lit(1)).alias("n_parts"),
-            )
-            .groupBy("scale", "floor_rows")
-            .agg(
-                F.sum(
-                    F.when(
-                        F.col("n_parts") >= 2, F.col("n_rows")
-                    ).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("close_rw")
-            )
-        )
-        bc = base.join(closed, ["scale", "floor_rows"])
-        amort = (
-            bc.select(
-                "scale",
-                "floor_rows",
-                F.lit("eager").alias("policy"),
-                F.col("eager_rw").alias("rw"),
-                "rows_ingested",
-                "n_months",
-                F.col("ls_eager").alias("live_sum"),
-            )
-            .unionByName(
-                bc.select(
-                    "scale",
-                    "floor_rows",
-                    F.lit("on_close").alias("policy"),
-                    F.col("close_rw").alias("rw"),
-                    "rows_ingested",
-                    "n_months",
-                    F.col("ls_close").alias("live_sum"),
-                )
-            )
-            .unionByName(
-                bc.select(
-                    "scale",
-                    "floor_rows",
-                    F.lit("at_end").alias("policy"),
-                    F.col("close_rw").alias("rw"),
-                    "rows_ingested",
-                    "n_months",
-                    F.col("ls_end").alias("live_sum"),
-                )
-            )
-        )
-        grp = sched_p.groupBy("scale", "floor_rows", "gid").agg(
-            F.min("m").alias("g_lo"),
-            F.expr("MAX(m) + INTERVAL 1 MONTH").alias("g_hi"),
-            F.sum("n").cast("bigint").alias("n_rows"),
-        )
-        preds = local_frame(
-            spark, [(p, lo, hi) for p, lo, hi in _CZP_PREDS],
-            "pred_id string, lo string, hi string",
-        ).select(
-            "pred_id",
-            F.col("lo").cast("timestamp").alias("lo"),
-            F.col("hi").cast("timestamp").alias("hi"),
-        )
-        mm = (
-            o.crossJoin(F.broadcast(preds))
-            .filter(
-                (F.col("o_orderdate") >= F.col("lo"))
-                & (F.col("o_orderdate") < F.col("hi"))
-            )
-            .groupBy(
-                "pred_id",
-                F.date_trunc("month", "o_orderdate").alias("m"),
-            )
-            .agg(F.count(F.lit(1)).cast("bigint").alias("rows_in0"))
-            .crossJoin(F.broadcast(sc))
-            .select(
-                "scale",
-                "pred_id",
-                "m",
-                F.floor(
-                    F.col("rows_in0") * F.col("num") / F.col("den")
-                )
-                .cast("bigint")
-                .alias("rows_in"),
-            )
-        )
-        obs = sched_p.select(
-            "scale",
-            "floor_rows",
-            F.col("t").alias("o_t"),
-            F.col("m").alias("o_m"),
-            F.col("gid").alias("o_gid"),
-            F.col("pfx").alias("o_pfx"),
-        )
-        p_end = F.expr("m + INTERVAL 1 MONTH")
-        loose_end = (
-            obs.join(sched_p, ["scale", "floor_rows"])
-            .filter(F.col("t") <= F.col("o_t"))
-            .join(
-                F.broadcast(preds),
-                (F.col("lo") < p_end) & (F.col("hi") > F.col("m")),
-            )
-            .groupBy("scale", "floor_rows")
-            .agg(F.sum("n").cast("bigint").alias("sc_end"))
-        )
-        loose_open = (
-            obs.join(sched_p, ["scale", "floor_rows"])
-            .filter(
-                (F.col("t") <= F.col("o_t"))
-                & (F.col("gid") == F.col("o_gid"))
-            )
-            .join(
-                F.broadcast(preds),
-                (F.col("lo") < p_end) & (F.col("hi") > F.col("m")),
-            )
-            .groupBy("scale", "floor_rows")
-            .agg(F.sum("n").cast("bigint").alias("sc_open"))
-        )
-        merged = (
-            obs.join(grp, ["scale", "floor_rows"])
-            .filter(F.col("gid") < F.col("o_gid"))
-            .join(
-                F.broadcast(preds),
-                (F.col("lo") < F.col("g_hi"))
-                & (F.col("hi") > F.col("g_lo")),
-            )
-            .groupBy("scale", "floor_rows")
-            .agg(F.sum("n_rows").cast("bigint").alias("sc_merged"))
-        )
-        o_end = F.expr("o_m + INTERVAL 1 MONTH")
-        eopen = (
-            obs.join(grp, ["scale", "floor_rows"])
-            .filter(F.col("gid") == F.col("o_gid"))
-            .join(
-                F.broadcast(preds),
-                (F.col("lo") < o_end) & (F.col("hi") > F.col("g_lo")),
-            )
-            .groupBy("scale", "floor_rows")
-            .agg(F.sum("o_pfx").cast("bigint").alias("sc_eopen"))
-        )
-        matched = (
-            obs.join(sched_p, ["scale", "floor_rows"])
-            .filter(F.col("t") <= F.col("o_t"))
-            .join(mm, ["scale", "m"])
-            .groupBy("scale", "floor_rows")
-            .agg(F.sum("rows_in").cast("bigint").alias("mt"))
-        )
-        rbase = (
-            matched.join(loose_end, ["scale", "floor_rows"], "left")
-            .join(loose_open, ["scale", "floor_rows"], "left")
-            .join(merged, ["scale", "floor_rows"], "left")
-            .join(eopen, ["scale", "floor_rows"], "left")
-            .select(
-                "scale",
-                "floor_rows",
-                "mt",
-                F.coalesce("sc_end", F.lit(0)).alias("sc_end"),
-                F.coalesce("sc_open", F.lit(0)).alias("sc_open"),
-                F.coalesce("sc_merged", F.lit(0)).alias("sc_merged"),
-                F.coalesce("sc_eopen", F.lit(0)).alias("sc_eopen"),
-            )
-        )
-        rb = (
-            rbase.select(
-                "scale",
-                "floor_rows",
-                F.lit("at_end").alias("policy"),
-                F.col("sc_end").alias("scanned"),
-                "mt",
-            )
-            .unionByName(
-                rbase.select(
-                    "scale",
-                    "floor_rows",
-                    F.lit("on_close").alias("policy"),
-                    (F.col("sc_merged") + F.col("sc_open")).alias(
-                        "scanned"
-                    ),
-                    "mt",
-                )
-            )
-            .unionByName(
-                rbase.select(
-                    "scale",
-                    "floor_rows",
-                    F.lit("eager").alias("policy"),
-                    (F.col("sc_merged") + F.col("sc_eopen")).alias(
-                        "scanned"
-                    ),
-                    "mt",
-                )
-            )
-        )
-        mx = amort.join(rb, ["scale", "floor_rows", "policy"]).select(
-            "scale",
-            "floor_rows",
-            "policy",
-            F.round(F.col("rw") * 1000000.0 / F.col("rows_ingested"))
-            .cast("bigint")
-            .alias("write_amp_ppm"),
-            F.round(F.col("live_sum") * 1000.0 / F.col("n_months"))
-            .cast("bigint")
-            .alias("mean_live_files_e3"),
-            F.round(F.col("scanned") * 1000000.0 / F.col("mt"))
-            .cast("bigint")
-            .alias("read_amp_ppm"),
-        )
-        ox = mx.select(
-            F.col("scale").alias("o_s"),
-            F.col("write_amp_ppm").alias("o_w"),
-            F.col("mean_live_files_e3").alias("o_l"),
-            F.col("read_amp_ppm").alias("o_r"),
-        )
-        dom = (
-            mx.join(
-                F.broadcast(ox),
-                (F.col("o_s") == F.col("scale"))
-                & (F.col("o_w") <= F.col("write_amp_ppm"))
-                & (F.col("o_l") <= F.col("mean_live_files_e3"))
-                & (F.col("o_r") <= F.col("read_amp_ppm"))
-                & (
-                    (F.col("o_w") < F.col("write_amp_ppm"))
-                    | (F.col("o_l") < F.col("mean_live_files_e3"))
-                    | (F.col("o_r") < F.col("read_amp_ppm"))
-                ),
-                "left",
-            )
-            .groupBy(
-                "scale",
-                "floor_rows",
-                "policy",
-                "write_amp_ppm",
-                "mean_live_files_e3",
-                "read_amp_ppm",
-            )
-            .agg(
-                F.sum(
-                    F.when(F.col("o_w").isNotNull(), 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("n_dominators")
-            )
-        )
-        out = dom.select(
-            "scale",
-            F.col("floor_rows").cast("bigint").alias("floor_rows"),
-            "policy",
-            "write_amp_ppm",
-            "mean_live_files_e3",
-            "read_amp_ppm",
-            "n_dominators",
-            (F.col("n_dominators") > 0).alias("dominated"),
-        ).orderBy("scale", "floor_rows", "policy")
-        return materialize(out)
-
-
-ROUND15_STAGED: dict[str, tuple] = {
-    "compaction_face_transfer": (
-        compaction_face_transfer,
-        _CFT_ORACLE.replace(
-            "{CFT_PREDS}",
-            ", ".join(
-                f"('{p}', TIMESTAMP '{lo}', TIMESTAMP '{hi}')"
-                for p, lo, hi in _CZP_PREDS
-            ),
-        ),
-    ),
-}

@@ -7,9 +7,7 @@ driver happens to produce — but it IS the flake class the round-8
 float-determinism campaign eliminates, so new hits should be snapped
 (CONTRIBUTING.md §8) or documented.
 
-Usage: python scripts/layout_scan.py [--chunk I N] [--staged] [name ...]
-  --staged scans the PENDING staged operators (operators/staging.py STAGED)
-  instead of the registry — run it before any staged registration.
+Usage: python scripts/layout_scan.py [--chunk I N] [name ...]
 """
 
 from __future__ import annotations
@@ -43,12 +41,7 @@ def rows_under(spark, fn, shuffle_parts: int, split_bytes: int):
 
 def main(argv: list[str]) -> int:
     names = argv
-    if names and names[0] == "--staged":
-        from bigdataentrytask_spark.operators.staging import STAGED
-        qs = {k: v[0] for k, v in STAGED.items()}
-        names = sorted(qs)
-    else:
-        qs = e.queries()
+    qs = e.queries()
     if names and names[0] == "--chunk":
         i, n = int(names[1]), int(names[2])
         allq = list(qs)

@@ -7,9 +7,7 @@ Steps (each its own process, so Spark sessions never collide):
   1. preverify --sweep 50          driver's exact next-round slate
   2. preverify --chunk i 4  (x4)   full-registry differential audit
   3. layout_scan --chunk i 4 (x4)  partition-layout determinism scan
-  4. preverify --staged + layout_scan --staged  (only while some
-     staged operator is NOT yet registered — skipped post-activation)
-  5. bench.py (internally best-of-3) headline + per-run spread
+  4. bench.py (internally best-of-3) headline + per-run spread
 
 Usage:  python scripts/roundcheck.py [--skip-bench] [--skip-layout]
                                      [--sweep-only]
@@ -31,21 +29,6 @@ import sys
 import time
 
 ROOT = __file__.rsplit("/", 2)[0]
-
-
-def staged_pending() -> bool:
-    """True only while some staged operator is NOT yet registered
-    (ADVICE r9: after the round-10 activation every ROUND10_STAGED op
-    is live in the registry, so the staged-diff/staged-layout steps
-    would re-run an empty-or-redundant set — the full-registry chunk
-    audit already covers registered operators)."""
-    sys.path.insert(0, ROOT)
-    from bigdataentrytask_spark.operators import REGISTRY, load_all
-
-    load_all()
-    from bigdataentrytask_spark.operators.staging import STAGED
-
-    return any(n not in REGISTRY for n in STAGED)
 
 
 def run(label: str, cmd: list[str]) -> tuple[str, bool, float, str]:
@@ -79,7 +62,7 @@ def run(label: str, cmd: list[str]) -> tuple[str, bool, float, str]:
 def parse_args(argv: list[str]) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--skip-bench", action="store_true",
-                    help="skip step 5 (bench.py)")
+                    help="skip step 4 (bench.py)")
     ap.add_argument("--skip-layout", action="store_true",
                     help="skip the layout_scan steps")
     ap.add_argument("--sweep-only", action="store_true",
@@ -102,13 +85,6 @@ def main(argv: list[str]) -> int:
                 results.append(
                     run(f"layout-{i}/4", ["scripts/layout_scan.py", "--chunk", str(i), "4"])
                 )
-        if staged_pending():
-            results.append(run("staged-diff", ["scripts/preverify.py", "--staged"]))
-            if not args.skip_layout:
-                results.append(run("staged-layout", ["scripts/layout_scan.py", "--staged"]))
-        else:
-            print("[staged] SKIP (no staged-but-unregistered operators; "
-                  "the chunk audit covers the registry)")
         if not args.skip_bench:
             label, ok, dt, tail = run("bench", ["bench.py"])
             results.append((label, ok, dt, tail))

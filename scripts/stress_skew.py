@@ -32,17 +32,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdataentrytask_spark.operators import REGISTRY, load_all
-
-
-def _resolve(name):
-    """Registered ops first; PENDING staged ops (not yet in the
-    registry) resolve through staging.STAGED so the stress gates
-    run before activation."""
-    if name in REGISTRY:
-        return REGISTRY[name]
-    from bigdataentrytask_spark.operators.staging import STAGED
-    return STAGED[name][0]
-
 from bigdataentrytask_spark.session import get_spark
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -132,7 +121,7 @@ def main() -> None:
           f"add {hot_o} ({100.0 * hot_o / no:.1f}%)")
     for name in ops:
         t0 = time.time()
-        rows = _resolve(name)(spark, DST).count()
+        rows = REGISTRY[name](spark, DST).count()
         print(f"STRESS-SKEW {name}: {rows} rows in {time.time() - t0:.2f}s",
               flush=True)
     shutil.rmtree(DST, ignore_errors=True)

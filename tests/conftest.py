@@ -73,3 +73,14 @@ def assert_matches_oracle(spark_df, duck_con, oracle_sql, name=""):
     sk, dk = _rows_key(srows), _rows_key(drows)
     for i, (a, b) in enumerate(zip(sk, dk)):
         assert a == b, f"{name}: first row mismatch at sorted idx {i}:\n spark={a}\n duck ={b}"
+
+
+@pytest.hookimpl(tryfirst=True)
+def pytest_collection_modifyitems(items):
+    """A module that sets DEFAULT_GATE_CASE is a slow suite except for
+    that one test, which stays in the default gate so every slow file
+    runs something on each default run."""
+    for item in items:
+        keep = getattr(getattr(item, "module", None), "DEFAULT_GATE_CASE", None)
+        if keep is not None and item.name != keep:
+            item.add_marker(pytest.mark.slow)

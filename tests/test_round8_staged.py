@@ -1,7 +1,5 @@
-"""Round-8 staged operators (registered during round 7, parked in
-__spark_entry__._DEFER so they consume no round-7 sweep slots).
-Each gets the oracle differential now so the round-8 sweep is
-de-risked before it starts."""
+"""Operator slate r8: each operator's oracle differential, plus
+per-operator invariants."""
 
 from __future__ import annotations
 
@@ -11,13 +9,13 @@ from bigdataentrytask_spark.operators import ORACLES, REGISTRY, load_all
 
 from .conftest import SF_DIR, assert_matches_oracle
 
-# Staged-slate suite: excluded from the default driver gate (see
-# pytest.ini); run with `pytest -m slow`.
-pytestmark = pytest.mark.slow
+# Slow suite (see pytest.ini): only this case runs in the default
+# gate; run the rest with `pytest -m slow`.
+DEFAULT_GATE_CASE = "test_round8_staged_oracle[heaps_law_fit]"
 
 load_all()
 
-ROUND8_STAGED = [
+ROUND8_STAGED = (
     "kendall_tau_qty_discount",
     "two_proportion_wilson",
     "runs_test_daily_revenue",
@@ -119,11 +117,8 @@ ROUND8_STAGED = [
     "neyman_allocation",
     "attribution_position_based",
     "dpp_partitioned_join",
-    # round-8 addition (VERDICT r7 item 7): the judge-requested
-    # sketch twin — pinned in __spark_entry__._PIN for this round's
-    # sweep, differential-covered here like the rest of the slate
     "column_profile_drift_approx",
-]
+)
 
 
 @pytest.mark.parametrize("name", ROUND8_STAGED)
@@ -132,22 +127,10 @@ def test_round8_staged_oracle(spark, duck, name):
     assert_matches_oracle(df, duck, ORACLES[name], name)
 
 
-def test_round8_staged_all_deferred():
-    """Every staged op must be in _DEFER (so round 7's sweep budget
-    stays as planned) AND registered with an oracle."""
-    import __spark_entry__ as entry
-
+def test_round8_staged_all_registered():
+    """Every slate op is registered with an oracle."""
     missing = [n for n in ROUND8_STAGED if n not in REGISTRY or n not in ORACLES]
     assert not missing, missing
-    # exact set equality WHILE the deferral is active: a name in _DEFER
-    # but not in this suite would reach the round-8 sweep without its
-    # oracle differential ever having run under pytest. Once round 8
-    # starts and _DEFER is cleared, the staged ops are ordinary
-    # never-checked entries and this gate stands down.
-    if entry._DEFER:
-        assert set(ROUND8_STAGED) == set(entry._DEFER), (
-            set(ROUND8_STAGED) ^ set(entry._DEFER)
-        )
 
 
 def test_merge_idempotence_holds(spark):
